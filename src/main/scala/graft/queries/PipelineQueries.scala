@@ -1645,14 +1645,9 @@ object PipelineQueries {
   private[graft] def corpusRetractFrom(s: SparkSession, d: String,
       retracted: DataFrame): DataFrame = {
     graft.functions.GraftFunctions.register(s)
-    val art = corpusRetractArtifacts(s, d)
-    corpusRetractDelta(Tables.documents(s, d), retracted,
-      qmeta = s.read.parquet(art.resolve("qmeta").toString),
-      s2ids = s.read.parquet(art.resolve("s2ids").toString),
-      s3ids = s.read.parquet(art.resolve("s3ids").toString),
-      s4meta = s.read.parquet(art.resolve("s4meta").toString),
-      benchGrams = s.read.parquet(art.resolve("benchgrams").toString),
-      pairs = DedupQueries.verifiedPairs(s, d).select("id1", "id2"))
+    val (f, benchGrams, pairs) = corpusFramesAtRest(s, d)
+    corpusRetractDelta(Tables.documents(s, d), retracted, f.qmeta,
+      f.s2ids, f.s3ids, f.s4meta, benchGrams, pairs)
   }
 
   /** The pure retraction delta over at-rest artifact frames — see
@@ -1686,40 +1681,35 @@ object PipelineQueries {
     corpusFinish(st.s4keep.unionByName(st.s4new.cache()))
   }
 
-  /** The membership-delta sets of a retraction plus the resulting S4
-    * frames — shared by the manifest gate ([[corpusRetractDelta]]) and
-    * the change ledger ([[corpusRetractLedgerFrom]]) so the two can
-    * never disagree about what a takedown changed. */
-  private[graft] final case class RetractState(rIds: Set[Long],
-      resurrected: Set[Long], doomedNow: Set[Long],
-      newcomers: Set[Long], contNew: Set[Long],
-      s4keep: DataFrame, s4new: DataFrame)
-
+  /** A retraction's [[UpsertState]] — shared by the manifest gate
+    * ([[corpusRetractDelta]]) and the change ledger
+    * ([[corpusRetractLedgerFrom]]) so the two can never disagree about
+    * what a takedown changed. A retraction is the upsert with no
+    * payload: no incoming content, so the steal / inserted-keeper
+    * machinery is vacuous and the propagation reduces exactly to the
+    * r15 retraction rules (CorpusRetractSpec pins every delete class
+    * against the from-scratch chain). */
   private[graft] def corpusRetractState(docs: DataFrame,
       retracted: DataFrame, qmeta: DataFrame, s2ids: DataFrame,
       s3ids: DataFrame, s4meta: DataFrame, benchGrams: DataFrame,
-      pairs: DataFrame, maxBlast: Int = 5000000): RetractState = {
-    // retraction = the delete-only special case of the generalized
-    // upsert state machine (r16): no incoming content, so the steal /
-    // inserted-keeper machinery is vacuous and the propagation below
-    // reduces exactly to the r15 retraction rules (CorpusRetractSpec
-    // pins every delete class against the from-scratch chain)
-    val st = corpusUpsertState(docs, retracted,
-      docs.select(col("doc_id"), col("lang"), col("text")).limit(0),
+      pairs: DataFrame, maxBlast: Int = 5000000): UpsertState =
+    corpusUpsertState(docs, retracted, noPayload(docs),
       qmeta, s2ids, s3ids, s4meta, benchGrams, pairs,
       // no incoming content ⇒ the signature index is never consulted
       banded = s2ids.select(col("doc_id").as("id"),
         lit(0).as("band"), xxhash64(col("doc_id")).as("band_hash"))
         .limit(0),
       maxBlast)
-    RetractState(st.rIds, st.resurrected, st.doomedNow, st.newcomers,
-      st.contNew, st.s4keep, st.s4new)
-  }
+
+  /** The empty upsert payload (doc_id, lang, text) over `docs`' schema:
+    * what a retraction carries. */
+  private[graft] def noPayload(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), col("lang"), col("text")).limit(0)
 
   /** Membership-delta sets of a general corpus UPSERT — old content of
     * `rIds` leaves, new content of `inserted` (⊆ rIds, same doc ids)
-    * enters — plus the resulting S4 frames. Superset of [[RetractState]]
-    * ([[corpusAmendFrom]]'s ledger needs the insert-side flips too). */
+    * enters — plus the resulting S4 frames. A retraction leaves the
+    * insert-side sets empty. */
   private[graft] final case class UpsertState(rIds: Set[Long],
       inserted: Set[Long], insKeepers: Set[Long], stolen: Set[Long],
       resurrected: Set[Long], doomedNow: Set[Long],
@@ -2054,57 +2044,85 @@ object PipelineQueries {
       doomedNow, newcomers, contNew, s4keep, s4new, newPairs, reElected)
   }
 
-  /** The four membership frames a retraction rewrites — the at-rest
-    * corpus state a SEQUENCE of takedowns threads through (the
-    * lifecycle gate's rewrite block, factored for reuse by the
-    * streaming-retraction consumer). */
-  private[graft] final case class RetractFrames(qmeta: DataFrame,
-      s2ids: DataFrame, s3ids: DataFrame, s4meta: DataFrame)
+  /** The at-rest corpus state a SEQUENCE of upserts threads through:
+    * the four membership frames plus the S2 signature index (the
+    * amendment candidate probe's input). */
+  private[graft] final case class CorpusFrames(qmeta: DataFrame,
+      s2ids: DataFrame, s3ids: DataFrame, s4meta: DataFrame,
+      sigs: DataFrame) {
+    /** Each frame with its dir name under an artifact root. */
+    def named: Seq[(String, DataFrame)] = Seq("qmeta" -> qmeta,
+      "s2ids" -> s2ids, "s3ids" -> s3ids, "s4meta" -> s4meta,
+      "sigindex" -> sigs)
+    def map(f: DataFrame => DataFrame): CorpusFrames =
+      CorpusFrames(f(qmeta), f(s2ids), f(s3ids), f(s4meta), f(sigs))
+  }
 
-  /** Apply one [[RetractState]] to the at-rest membership frames —
-    * all map-side anti-joins/unions against LOCAL broadcast delta sets
-    * (the corpusLifecycleArtifacts rewrite rules, verbatim):
-    * qmeta drops the retracted ids; S2 swaps retracted keepers for
-    * re-elected twins; S3 drops retracted + freshly-doomed and gains
-    * the newcomers; S4 is the state's keep ∪ new. */
-  private[graft] def retractRewrite(s: SparkSession,
-      st: RetractState, frames: RetractFrames): RetractFrames = {
+  private[graft] object CorpusFrames {
+    /** The frames [[CorpusFrames.named]] laid out under `root`. */
+    def read(s: SparkSession, root: String): CorpusFrames = {
+      def at(name: String) = s.read.parquet(s"$root/$name")
+      CorpusFrames(at("qmeta"), at("s2ids"), at("s3ids"), at("s4meta"),
+        at("sigindex"))
+    }
+  }
+
+  /** Apply one [[UpsertState]] to the [[CorpusFrames]] — the ONE set of
+    * corpus rewrite rules, shared by the stream driver's per-batch
+    * commit ([[graft.streaming.StreamOps.streamCrudRun]]) and the
+    * lifecycle gate's artifact rewrite. All map-side anti-joins/unions
+    * against LOCAL broadcast delta sets. `amended` is the upsert
+    * payload (empty for a retraction, see [[noPayload]]); `docs` holds
+    * the current text the re-elected twins' signatures are read from.
+    *
+    *  - qmeta drops rIds and gains the new content's quality rows
+    *    (digest / n_tokens), so later keeper contests see it
+    *  - S2 swaps rIds and stolen keepers for re-elected twins and
+    *    inserted keepers
+    *  - S3 drops rIds, stolen, freshly doomed and newcomers, then gains
+    *    the newcomers
+    *  - S4 is the state's keep ∪ new
+    *  - the signature index follows S2 (a later probe must near-dup
+    *    against CURRENT content): it drops rIds and stolen ids and
+    *    gains the re-elected twins' and inserted keepers' signatures */
+  private[graft] def upsertRewrite(st: UpsertState, f: CorpusFrames,
+      amended: DataFrame, docs: DataFrame): CorpusFrames = {
+    import graft.operators.IncrementalDedup
+    val s = docs.sparkSession
     import s.implicits._
     def probe(set: Iterable[Long]): DataFrame =
       broadcast(set.toSeq.toDF("doc_id"))
-    RetractFrames(
-      frames.qmeta.join(probe(st.rIds), Seq("doc_id"), "left_anti"),
-      frames.s2ids.join(probe(st.rIds), Seq("doc_id"), "left_anti")
-        .unionAll(probe(st.resurrected)),
-      frames.s3ids
-        .join(probe(st.rIds ++ st.newcomers ++ st.doomedNow),
-          Seq("doc_id"), "left_anti")
+    def sigsOf(df: DataFrame, ids: Set[Long]): DataFrame =
+      IncrementalDedup.signatures(
+        df.join(probe(ids), Seq("doc_id"), "left_semi"), "doc_id", "text")
+    val aq = qualityGate(amended)
+    CorpusFrames(
+      f.qmeta.join(probe(st.rIds), Seq("doc_id"), "left_anti")
+        .unionByName(aq.select(col("doc_id"), col("lang"),
+          col("n_tokens"), sha2(col("text"), 256).as("digest"))),
+      f.s2ids.join(probe(st.rIds ++ st.stolen), Seq("doc_id"), "left_anti")
+        .unionAll(probe(st.resurrected ++ st.insKeepers)),
+      f.s3ids.join(probe(st.rIds ++ st.stolen ++ st.doomedNow ++
+          st.newcomers), Seq("doc_id"), "left_anti")
         .unionAll(probe(st.newcomers)),
-      st.s4keep.unionByName(st.s4new))
+      st.s4keep.unionByName(st.s4new),
+      f.sigs.join(probe(st.rIds ++ st.stolen)
+          .withColumnRenamed("doc_id", "id"), Seq("id"), "left_anti")
+        .unionAll(sigsOf(docs, st.resurrected))
+        .unionAll(sigsOf(aq, st.insKeepers)))
   }
 
-  /** The at-rest [[RetractFrames]] + static probe sets of the
-    * retraction artifacts, for consumers that thread takedowns through
-    * sequentially (the streaming retraction gate). */
-  private[graft] def retractFramesAtRest(s: SparkSession, d: String)
-      : (RetractFrames, DataFrame, DataFrame) = {
+  /** The at-rest [[CorpusFrames]] + static probe sets (bench grams,
+    * verified pairs) of the retraction artifacts: the state the
+    * one-shot retraction gates and the corpus stream driver start
+    * from. */
+  private[graft] def corpusFramesAtRest(s: SparkSession, d: String)
+      : (CorpusFrames, DataFrame, DataFrame) = {
     val art = corpusRetractArtifacts(s, d)
-    (RetractFrames(
-      s.read.parquet(art.resolve("qmeta").toString),
-      s.read.parquet(art.resolve("s2ids").toString),
-      s.read.parquet(art.resolve("s3ids").toString),
-      s.read.parquet(art.resolve("s4meta").toString)),
+    (CorpusFrames.read(s, art.toString),
       s.read.parquet(art.resolve("benchgrams").toString),
       DedupQueries.verifiedPairs(s, d).select("id1", "id2"))
   }
-
-  /** The at-rest S2 signature index of the retraction artifacts (the
-    * amendment candidate probe's input), for consumers that maintain
-    * it across a stream of upserts. */
-  private[graft] def retractSigsAtRest(s: SparkSession,
-      d: String): DataFrame =
-    graft.operators.IncrementalDedup.readIndex(s,
-      corpusRetractArtifacts(s, d).resolve("sigindex").toString)
 
   /** The registered retraction set: every id ≥ 5 with id ≡ 7 (mod 17)
     * — chosen (measured across the 3 SFs) so the takedown hits
@@ -2142,7 +2160,7 @@ object PipelineQueries {
       amendments: DataFrame): (UpsertState, DataFrame) = {
     graft.functions.GraftFunctions.register(s)
     val art = corpusRetractArtifacts(s, d)
-    val s4meta = s.read.parquet(art.resolve("s4meta").toString)
+    val f = CorpusFrames.read(s, art.toString)
     // the amendment payload is delta-sized by contract and its
     // generating plan (the driver fixture's corpus self-join) would
     // otherwise re-execute for every bounded collect that touches the
@@ -2152,15 +2170,11 @@ object PipelineQueries {
     // the collects themselves)
     val am = amendments.cache()
     (corpusUpsertState(Tables.documents(s, d),
-      am.select("doc_id"), am,
-      qmeta = s.read.parquet(art.resolve("qmeta").toString),
-      s2ids = s.read.parquet(art.resolve("s2ids").toString),
-      s3ids = s.read.parquet(art.resolve("s3ids").toString),
-      s4meta = s4meta,
+      am.select("doc_id"), am, f.qmeta, f.s2ids, f.s3ids, f.s4meta,
       benchGrams = s.read.parquet(art.resolve("benchgrams").toString),
       pairs = DedupQueries.verifiedPairs(s, d).select("id1", "id2"),
       banded = graft.operators.IncrementalDedup.readBandedIndex(s,
-        art.resolve("banded").toString)), s4meta)
+        art.resolve("banded").toString)), f.s4meta)
   }
 
   /** Per-doc CHANGE ledger of an amendment — ONE event per membership
@@ -2259,24 +2273,18 @@ object PipelineQueries {
     *  - `resurrected_neardup_victim` — undoomed when its only culprits
     *                                   left
     *
-    * Derived from the SAME [[RetractState]] the manifest gate consumes,
+    * Derived from the SAME [[UpsertState]] the manifest gate consumes,
     * so ledger and manifest cannot disagree; docs that resurrect at S3
     * but fail decontam never flip membership and are correctly absent. */
   private[graft] def corpusRetractLedgerFrom(s: SparkSession, d: String,
       retracted: DataFrame): DataFrame = {
     import s.implicits._
     graft.functions.GraftFunctions.register(s)
-    val art = corpusRetractArtifacts(s, d)
-    val s4meta = s.read.parquet(art.resolve("s4meta").toString)
+    val (f, benchGrams, pairs) = corpusFramesAtRest(s, d)
     val st = corpusRetractState(Tables.documents(s, d), retracted,
-      qmeta = s.read.parquet(art.resolve("qmeta").toString),
-      s2ids = s.read.parquet(art.resolve("s2ids").toString),
-      s3ids = s.read.parquet(art.resolve("s3ids").toString),
-      s4meta = s4meta,
-      benchGrams = s.read.parquet(art.resolve("benchgrams").toString),
-      pairs = DedupQueries.verifiedPairs(s, d).select("id1", "id2"))
+      f.qmeta, f.s2ids, f.s3ids, f.s4meta, benchGrams, pairs)
     def removed(ids: Set[Long], reason: String) =
-      s4meta.join(broadcast(ids.toSeq.toDF("doc_id")), Seq("doc_id"),
+      f.s4meta.join(broadcast(ids.toSeq.toDF("doc_id")), Seq("doc_id"),
           "left_semi")
         .select(col("doc_id"), lit(reason).as("reason"))
     val born = (st.newcomers -- st.contNew).toSeq.sorted
@@ -2296,8 +2304,8 @@ object PipelineQueries {
     * day-1+2 state — the full corpus-lifecycle state machine
     * (append → compact → RETRACT → append again): runs
     * [[corpusRetractState]] over the compacted membership frames,
-    * then REWRITES the artifacts so later ingests see the corrected
-    * world:
+    * then REWRITES the artifacts with the shared [[upsertRewrite]]
+    * rules so later ingests see the corrected world:
     *
     *  - qmeta/digests lose the retracted docs (content whose every
     *    carrier was retracted becomes NEW again for future arrivals)
@@ -2344,31 +2352,21 @@ object PipelineQueries {
       val st = corpusRetractState(atRest, retracted, qmeta, s2ids,
         s3ids, s4meta, benchGrams,
         DedupQueries.verifiedPairs(s, d).select("id1", "id2"))
-      def probe(set: Iterable[Long]) = {
-        import s.implicits._
-        broadcast(set.toSeq.toDF("doc_id"))
-      }
-      // membership rewrites (all map-side vs broadcast delta sets)
-      qmeta.join(probe(st.rIds), Seq("doc_id"), "left_anti")
-        .write.mode("overwrite").parquet(dir.resolve("qmeta").toString)
+      // the shared rewrite rules; S2 is the index's id set here, so the
+      // rewritten s2ids frame is not written
+      val next = upsertRewrite(st,
+        CorpusFrames(qmeta, s2ids, s3ids, s4meta, sigs),
+        noPayload(atRest), docs)
+      next.qmeta.write.mode("overwrite")
+        .parquet(dir.resolve("qmeta").toString)
       s.read.parquet(dir.resolve("qmeta").toString)
         .select("digest").distinct().write.mode("overwrite")
         .parquet(dir.resolve("digests").toString)
-      val affected = st.newcomers ++ st.doomedNow // fresh-verdict docs
-      s3ids.join(probe(st.rIds ++ affected), Seq("doc_id"), "left_anti")
-        .unionAll(probe(st.newcomers))
-        .write.mode("overwrite").parquet(dir.resolve("s3ids").toString)
-      st.s4keep.unionByName(st.s4new).write.mode("overwrite")
+      next.s3ids.write.mode("overwrite")
+        .parquet(dir.resolve("s3ids").toString)
+      next.s4meta.write.mode("overwrite")
         .parquet(dir.resolve("s4meta").toString)
-      // index rewrite: drop retracted, add re-elected twins' sigs
-      val bornSigs = IncrementalDedup.signatures(
-        docs.join(probe(st.resurrected), Seq("doc_id"), "left_semi"),
-        "doc_id", "text")
-      val sigsNew = sigs
-        .join(probe(st.rIds).withColumnRenamed("doc_id", "id"),
-          Seq("id"), "left_anti")
-        .unionAll(bornSigs)
-      IncrementalDedup.writeIndex(sigsNew, dir.resolve("sigs").toString)
+      IncrementalDedup.writeIndex(next.sigs, dir.resolve("sigs").toString)
       IncrementalDedup.writeBandedIndex(
         s.read.parquet(dir.resolve("sigs").toString),
         dir.resolve("banded").toString)

@@ -68,22 +68,29 @@ object StreamOps {
       }
     }
 
-  /** Per-batch state-snapshot write with a SIZE-ADAPTIVE file count
-    * (r18, guide §6 "coalesce on write"): the map-side rewrite plans
-    * inherit their INPUT frame's file layout, so each batch's snapshot
-    * carries the previous snapshot's files plus its union arms — file
-    * counts GROW per batch (measured: the amend gate's s2ids 33 → 49 →
-    * 57 files over three batches) and every later frame reference pays
-    * one scan task per file (~5 900 tasks/gate, dominated by per-task
-    * deserialize of the growing plans). An AQE REBALANCE before the
-    * write packs the output to advisory-sized partitions — ONE file at
-    * gate scale, target-sized files at corpus scale — so frame-scan
-    * cost stays ∝ bytes, never ∝ batch count. This is the GATE-scale
-    * full-snapshot writer only; the 100 TB regime flips to
-    * [[partitionedUpsert]] (see the frame-checkpoint posture note),
+  /** Per-batch state-snapshot write, by default with a SIZE-ADAPTIVE
+    * file count (r18, guide §6 "coalesce on write"): the map-side
+    * rewrite plans inherit their INPUT frame's file layout, so each
+    * batch's snapshot carries the previous snapshot's files plus its
+    * union arms — file counts GROW per batch (measured: the amend
+    * gate's s2ids 33 → 49 → 57 files over three batches) and every
+    * later frame reference pays one scan task per file (~5 900
+    * tasks/gate, dominated by per-task deserialize of the growing
+    * plans). An AQE REBALANCE before the write packs the output to
+    * advisory-sized partitions — ONE file at gate scale, target-sized
+    * files at corpus scale — so frame-scan cost stays ∝ bytes, never ∝
+    * batch count. Only INSERTED content compounds the count: a
+    * pure-delete rewrite sheds rows (measured 1–9 files/frame over the
+    * retract replay), so `rebalance = false` skips the pure-overhead
+    * shuffle there (r18: plain writes 6.1–6.5 s vs 7.4–8.6 s on
+    * q_stream_retract_full). This is the GATE-scale full-snapshot
+    * writer only; the 100 TB regime flips to [[partitionedUpsert]]
+    * (see the frame-checkpoint posture note on [[streamCrudRun]]),
     * whose layout is handled separately. */
-  private def writeSnapshot(df: DataFrame, path: String): Unit =
-    df.hint("rebalance").write.mode("overwrite").parquet(path)
+  private def writeSnapshot(df: DataFrame, path: String,
+      rebalance: Boolean = true): Unit =
+    (if (rebalance) df.hint("rebalance") else df)
+      .write.mode("overwrite").parquet(path)
 
   case class EventRow(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
       event_type: String, value: Double)
@@ -805,27 +812,12 @@ object StreamOps {
   def streamChunks(spark: SparkSession, dir: String): DataFrame =
     runToMemory(spark, streamChunksPlan(spark, dir), OutputMode.Append())
 
-  /** Streaming upsert maintenance gate ([[StreamUpsert]]): three
-    * sequential CDC delta batches — full insert, then update-%5 /
-    * delete-%7, then update-%3 / delete-%11 — stream through the
-    * foreachBatch merge sink; returns the final committed snapshot.
-    * The fixture's text derives from `md5(doc_id)` so the DuckDB oracle
-    * reconstructs the final state closed-form (delete-wins, later
-    * upserts replace, deletes resurrect on re-upsert). The delta
-    * batches are driver-generated fixture rows (MemoryStream's
-    * contract, same as every streaming spec — bounded by the doc-id
-    * range); production deltas arrive from a real source and the sink
-    * path is identical. */
   /** Streaming takedowns (r16 verdict #3): retraction events arrive ON
-    * the stream and each micro-batch applies the bounded-blast
-    * retraction delta ([[graft.queries.PipelineQueries
-    * .corpusRetractState]]) against the CURRENT at-rest membership
-    * frames, then rewrites them (the corpusLifecycle rewrite rules via
-    * `retractRewrite`) — the ingest-side posture of q_corpus_retract.
-    * Frames checkpoint to batchId-named parquet dirs per micro-batch
-    * (idempotent overwrite: a retried batch rewrites the same state
-    * from the same input frames), so lineage stays flat at any stream
-    * length and a crash resumes from the last committed frames.
+    * the stream as delete-only batches of the corpus CRUD driver
+    * ([[streamCrudRun]]), so each micro-batch applies the bounded-blast
+    * retraction delta against the CURRENT at-rest state and rewrites
+    * it — the ingest-side posture of q_corpus_retract. A delete carries
+    * no payload: a retraction is the upsert with no new content.
     *
     * Order-independence: the final manifest equals ONE batch
     * retraction of the union set because each delta step lands exactly
@@ -835,74 +827,19 @@ object StreamOps {
     * takedowns in reverse batch order and asserts the identical
     * manifest. */
   private[graft] def streamRetractFrom(spark: SparkSession, dir: String,
-      batches: Seq[Seq[Long]]): DataFrame = {
-    import graft.queries.PipelineQueries
-    graft.functions.GraftFunctions.register(spark)
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val docs = graft.sources.Tables.documents(spark, dir)
-    // hot state between micro-batches (see streamAmendRun): the delta
-    // probes scan each frame ~2-3× per batch — keep the current
-    // generation cached, dropping the superseded one on commit
-    def swapHot(old: DataFrame, next: DataFrame): DataFrame = {
-      old.unpersist()
-      next.cache()
-    }
-    var (cur, benchGrams, pairs) =
-      PipelineQueries.retractFramesAtRest(spark, dir)
-    cur = PipelineQueries.RetractFrames(cur.qmeta.cache(),
-      cur.s2ids.cache(), cur.s3ids.cache(), cur.s4meta.cache())
-    pairs = pairs.cache()
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_sretract").toString
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_sretract_ckpt").toString
-    val input = MemoryStream[Long]
-    val q = input.toDF().toDF("doc_id").writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val tB0 = System.nanoTime()
-        val st = PipelineQueries.corpusRetractState(docs,
-          batch.select("doc_id"), cur.qmeta, cur.s2ids, cur.s3ids,
-          cur.s4meta, benchGrams, pairs)
-        // delta phase ends with corpusRetractState's bounded collects;
-        // the rewrite plans below materialize in the checkpoint writes
-        val tDelta = (System.nanoTime() - tB0) / 1e9
-        val next = PipelineQueries.retractRewrite(spark, st, cur)
-        val base = s"$out/b$batchId"
-        val tR0 = System.nanoTime()
-        // the four frame rewrites are independent plans over disjoint
-        // dirs — materialize them concurrently (r17, guide §2.6)
-        runConcurrently(Seq(
-          () => writeSnapshot(next.qmeta, s"$base/qmeta"),
-          () => writeSnapshot(next.s2ids, s"$base/s2ids"),
-          () => writeSnapshot(next.s3ids, s"$base/s3ids"),
-          () => writeSnapshot(next.s4meta, s"$base/s4meta")))
-        cur = PipelineQueries.RetractFrames(
-          swapHot(cur.qmeta, spark.read.parquet(s"$base/qmeta")),
-          swapHot(cur.s2ids, spark.read.parquet(s"$base/s2ids")),
-          swapHot(cur.s3ids, spark.read.parquet(s"$base/s3ids")),
-          swapHot(cur.s4meta, spark.read.parquet(s"$base/s4meta")))
-        // per-batch phase attribution (r16 verdict #4)
-        System.err.println(f"[stream-retract] batch $batchId: delta " +
-          f"$tDelta%.2f s, frame-rewrite+checkpoint " +
-          f"${(System.nanoTime() - tR0) / 1e9}%.2f s " +
-          f"(${st.rIds.size} retracted)")
-        ()
-      }
-      .start()
-    try batches.foreach { b => input.addData(b); q.processAllAvailable() }
-    finally q.stop()
-    PipelineQueries.corpusFinish(cur.s4meta)
-  }
+      batches: Seq[Seq[Long]]): DataFrame =
+    streamCrudRun(spark, dir, batches.map(_.map(CrudEvent.delete)),
+      graft.queries.PipelineQueries.noPayload(
+        graft.sources.Tables.documents(spark, dir))).manifest
 
   /** Streaming AMENDMENTS (r16 capstone — the full corpus CRUD state
     * machine driven from a stream): re-crawl events arrive as doc-id
-    * micro-batches; each batch fetches its new content by id (the
-    * re-crawl-queue posture: the stream carries identities, the
+    * micro-batches of upserts; each batch fetches its new content by id
+    * (the re-crawl-queue posture: the stream carries identities, the
     * crawler's store carries payloads), applies the atomic upsert
     * delta ([[graft.queries.PipelineQueries.corpusUpsertState]])
-    * against the CURRENT at-rest state, and rewrites ALL of it:
+    * against the CURRENT at-rest state, and rewrites ALL of it
+    * ([[streamCrudRun]]):
     *
     *  - the four membership frames (the lifecycle rules + the insert
     *    side: stolen keepers out of S2/S3, inserted keepers in)
@@ -924,25 +861,34 @@ object StreamOps {
     * from-scratch state of the current world, and set replacement on
     * disjoint ids is order-free) — StreamAmendSpec replays both batch
     * orders; a REDELIVERED event (same id, same payload) is a no-op,
-    * the at-least-once tolerance (also spec-gated). State
-    * checkpoints to batchId-named parquet dirs per micro-batch:
-    * idempotent under retry, flat lineage at any stream length. */
+    * the at-least-once tolerance (also spec-gated). */
   private[graft] def streamAmendFrom(spark: SparkSession, dir: String,
       idBatches: Seq[Seq[Long]], amendments: DataFrame): DataFrame =
     streamAmendRun(spark, dir, idBatches, amendments).manifest
 
-  /** A [[streamAmendRun]]'s outcome: the manifest plus the final
+  /** One corpus CRUD stream event: `doc_id` is upserted with its row in
+    * the payload store as new content, or — `is_delete` — leaves the
+    * corpus. A delete carries no payload. */
+  private[graft] final case class CrudEvent(doc_id: Long,
+      is_delete: Boolean)
+
+  private[graft] object CrudEvent {
+    def upsert(id: Long): CrudEvent = CrudEvent(id, is_delete = false)
+    def delete(id: Long): CrudEvent = CrudEvent(id, is_delete = true)
+  }
+
+  /** A [[streamCrudRun]]'s outcome: the manifest plus the final
     * overlay accounting (|everAmended|, |pairsNew|, folds fired), so
     * the compaction spec can assert a fold actually emptied the
     * overlays — not just that the manifest survived. */
-  private[graft] final case class AmendStreamResult(manifest: DataFrame,
+  private[graft] final case class CrudStreamResult(manifest: DataFrame,
       overlayAmended: Long, overlayPairs: Long, folds: Long)
 
   /** [[streamAmendFrom]] with the overlay lifecycle exposed (r16
     * verdict #3 — the one 100×-scale liability in the r16 code): the
     * driver-held overlays (`everAmended`, `pairsNew`, the latest-text
     * `amendedRows` union in `docsCur`) grow with stream LIFETIME, not
-    * batch size. Two controls close that:
+    * batch size. Two controls of [[streamCrudRun]] close that:
     *
     *  - `maxOverlay` — a maxBlast-style LOUD raise on accumulated
     *    overlay cardinality (|everAmended| + |pairsNew|): a long-lived
@@ -954,19 +900,23 @@ object StreamOps {
     *    (`part = doc_id mod DocStoreParts`, converted ONCE up front —
     *    a production 100 TB table is already stored partitioned), and
     *    a fold rewrites ONLY the partitions its overlay touches
-    *    (touched rows minus amended ids, plus the overlay's latest
-    *    text), staged to a tmp dir and swapped in per partition — the
-    *    commit a real deployment does with FileSystem.rename plus a
-    *    fold marker. Fold cost is therefore ∝ overlay (touched
+    *    ([[foldDocStore]]). Fold cost is therefore ∝ overlay (touched
     *    partitions), never corpus. The pair graph is id-pair METADATA
     *    (index-sized, no text): its fold is a plain rewrite of the
     *    effective view, the same class of offline work as the day-3
-    *    signature-index merge. Crash recovery: the overlays are
-    *    re-derivable from the per-batch checkpoints (`everAmended` =
-    *    the amended checkpoint's id set; `pairsNew` rides in the
-    *    checkpointed pair overlay), so a fold interrupted before its
-    *    swap completes re-runs idempotently from the last committed
-    *    batch state. */
+    *    signature-index merge. The overlays are re-derivable from the
+    *    per-batch state generations (`everAmended` = the amended
+    *    generation's id set; `pairsNew` rides in the pair overlay).
+    *
+    * The frame-checkpoint scale posture is on [[streamCrudRun]]. */
+  private[graft] def streamAmendRun(spark: SparkSession, dir: String,
+      idBatches: Seq[Seq[Long]], amendments: DataFrame,
+      compactEvery: Int = 0, maxOverlay: Long = 5000000L,
+      alsoPerBatch: (DataFrame, Long) => Unit = (_, _) => ())
+      : CrudStreamResult =
+    streamCrudRun(spark, dir, idBatches.map(_.map(CrudEvent.upsert)),
+      amendments, compactEvery, maxOverlay, alsoPerBatch)
+
   /** Fold a latest-text overlay into a mod-`parts` hash-partitioned
     * documents store: ONLY the partitions holding overlay ids are
     * rewritten (their at-rest rows minus the amended ids, plus the
@@ -1015,25 +965,56 @@ object StreamOps {
       .write.mode("overwrite").partitionBy("part").parquet(tmp)
     touched.foreach { k =>
       val dst = java.nio.file.Paths.get(store, s"part=$k")
-      val src = java.nio.file.Paths.get(tmp, s"part=$k")
-      if (java.nio.file.Files.isDirectory(dst)) {
-        val walk = java.nio.file.Files.walk(dst)
-        try walk.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => { java.nio.file.Files.delete(p); () })
-        finally walk.close()
-      }
-      java.nio.file.Files.move(src, dst)
+      deleteTree(dst)
+      java.nio.file.Files.move(java.nio.file.Paths.get(tmp, s"part=$k"),
+        dst)
     }
     touched.size
   }
 
-  /** Frame-checkpoint scale posture: at gate scale every batch writes
-    * FULL batchId-named frame snapshots — crash-resume is "read the
-    * last committed batch", the property the replay/idempotence proofs
-    * lean on, and the frames are small. When the frames outgrow full
-    * rewrites (the 100 TB regime: qmeta's digests and the 32-int
-    * signatures are corpus-scale bytes), the state writer flips to the
-    * SAME keyed delete-insert the overlay fold uses
+  /** Delete `p` and everything under it, if it exists. */
+  private def deleteTree(p: java.nio.file.Path): Unit =
+    if (java.nio.file.Files.exists(p)) {
+      val walk = java.nio.file.Files.walk(p)
+      try walk.sorted(java.util.Comparator.reverseOrder())
+        .forEach(x => { java.nio.file.Files.delete(x); () })
+      finally walk.close()
+    }
+
+  /** THE corpus CRUD stream driver — [[streamRetractFrom]],
+    * [[streamRetractFull]], [[streamAmendRun]] and [[streamAmendFrom]]
+    * are thin callers. One streaming query, one deterministic state
+    * transition per micro-batch: each batch of [[CrudEvent]]s applies
+    * ONE atomic [[graft.queries.PipelineQueries.corpusUpsertState]]
+    * against the CURRENT state (every event id's old content leaves,
+    * the upserts' payload rows enter), rewrites the corpus frames with
+    * the shared rules ([[graft.queries.PipelineQueries.upsertRewrite]])
+    * and maintains the pair-graph and latest-text overlays (see
+    * [[streamAmendFrom]] for what each rewrite carries and
+    * [[streamAmendRun]] for the overlay lifecycle).
+    *
+    * Event contract, enforced loudly before anything commits: an
+    * upsert must have a row in `payloads`; a delete needs none; an id
+    * named by both ops in one batch raises rather than silently
+    * picking one.
+    *
+    * State ownership: the run keeps ONE temp dir holding the streaming
+    * checkpoint, the fold stores and a `b<batchId>` state generation
+    * per micro-batch, written in full. A retried batch rewrites the
+    * same `b<batchId>` dirs idempotently from the same input frames,
+    * and lineage stays flat at any stream length. There is NO resume:
+    * a restart replays from the at-rest artifacts. Each superseded
+    * generation is deleted once its successor is swapped in; on return
+    * the checkpoint and fold stores are deleted and every cached frame
+    * is released, so the returned manifest reads the LAST generation
+    * from disk (the one dir the run leaves behind).
+    *
+    * Frame-checkpoint scale posture: at gate scale every batch writes
+    * FULL state generations — the frames are small, and the
+    * replay/idempotence proofs lean on whole generations. When the
+    * frames outgrow full rewrites (the 100 TB regime: qmeta's digests
+    * and the 32-int signatures are corpus-scale bytes), the state
+    * writer flips to the SAME keyed delete-insert the overlay fold uses
     * ([[partitionedUpsert]]): every per-batch remove/add set is
     * already a bounded DRIVER delta (rIds / stolen / resurrected /
     * insKeepers / doomedNow / newcomers, plus the delta-sized aq /
@@ -1044,16 +1025,17 @@ object StreamOps {
     * partitioned-store rewrite is semantically invisible.
     *
     * @param alsoPerBatch sibling-store hook, called INSIDE each
-    *        foreachBatch with (batch ids, batchId) after the corpus
-    *        state commit — the cross-artifact seam: a re-crawl event
-    *        that amends the corpus can atomically reach its other
-    *        representations (the vector index, q_stream_amend_full)
-    *        in the SAME micro-batch. */
-  private[graft] def streamAmendRun(spark: SparkSession, dir: String,
-      idBatches: Seq[Seq[Long]], amendments: DataFrame,
+    *        foreachBatch with (batch ids, batchId) in the same
+    *        concurrent wave as the corpus state commit — the
+    *        cross-artifact seam: an event that changes the corpus can
+    *        atomically reach its other representations (the vector
+    *        index, q_stream_amend_full / q_stream_retract_full) in the
+    *        SAME micro-batch. */
+  private[graft] def streamCrudRun(spark: SparkSession, dir: String,
+      events: Seq[Seq[CrudEvent]], payloads: DataFrame,
       compactEvery: Int = 0, maxOverlay: Long = 5000000L,
       alsoPerBatch: (DataFrame, Long) => Unit = (_, _) => ())
-      : AmendStreamResult = {
+      : CrudStreamResult = {
     import graft.queries.{PipelineQueries => PQ}
     import graft.operators.IncrementalDedup
     graft.functions.GraftFunctions.register(spark)
@@ -1070,7 +1052,7 @@ object StreamOps {
     // run (r17 optimization; guide §5 "caching is worth it when a
     // DataFrame is reused and recomputing is more expensive than the
     // memory pressure" — here the memory is delta-sized).
-    val amendStore = amendments.cache()
+    val store = payloads.cache()
     // r17 optimization: each micro-batch's delta probes scan the
     // at-rest membership frames ~3× and the frame rewrites read them
     // again — keep the CURRENT state generation hot between batches
@@ -1082,20 +1064,18 @@ object StreamOps {
       old.unpersist()
       next.cache()
     }
-    var (cur, benchGrams, staticPairs) =
-      PQ.retractFramesAtRest(spark, dir)
-    cur = PQ.RetractFrames(cur.qmeta.cache(), cur.s2ids.cache(),
-      cur.s3ids.cache(), cur.s4meta.cache())
+    var (cur, benchGrams, staticPairs) = PQ.corpusFramesAtRest(spark, dir)
+    cur = cur.map(_.cache())
     staticPairs = staticPairs.cache()
-    var sigs = PQ.retractSigsAtRest(spark, dir).cache()
     var pairsNew = Seq.empty[(Long, Long)]
+    // ids whose at-rest text is void: upserted or deleted since the
+    // last fold (amendedRows holds the upserts' latest text)
     var everAmended = Set.empty[Long]
     var amendedRows: DataFrame =
       Seq.empty[(Long, String, String)].toDF("doc_id", "lang", "text")
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_samend").toString
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_samend_ckpt").toString
+    val out = java.nio.file.Files.createTempDirectory("graft_scrud")
+    // the live state generation, once a batch has committed
+    var gen = Option.empty[java.nio.file.Path]
     def probe(ids: Set[Long]): DataFrame =
       broadcast(ids.toSeq.toDF("doc_id"))
     val DocStoreParts = 32
@@ -1127,7 +1107,7 @@ object StreamOps {
           .hint("rebalance")
           .write.mode("overwrite").parquet(pairsDir)
         staticPairs = swapHot(staticPairs, spark.read.parquet(pairsDir))
-        System.err.println(f"[stream-amend] fold ${folds + 1}: " +
+        System.err.println(f"[stream-crud] fold ${folds + 1}: " +
           f"${everAmended.size} amended ids over $touched of " +
           f"$DocStoreParts doc partitions, ${pairsNew.size} fresh " +
           f"pairs folded in ${(System.nanoTime() - t0) / 1e9}%.2f s")
@@ -1137,30 +1117,40 @@ object StreamOps {
         amendedRows = docs.limit(0)
         folds += 1
       }
-    val input = MemoryStream[Long]
-    val q = input.toDF().toDF("doc_id").writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (ids: DataFrame, batchId: Long) =>
+    val input = MemoryStream[CrudEvent]
+    val q = input.toDF().writeStream
+      .option("checkpointLocation", s"$out/checkpoint")
+      .foreachBatch { (ev: DataFrame, batchId: Long) =>
         val tB0 = System.nanoTime()
+        val ids = ev.select("doc_id")
+        val upserts = ev.filter(!col("is_delete")).select("doc_id")
         // the batch payload is delta-sized and re-read by ~8 downstream
         // jobs (rIds collect, quality gate, fresh-pair text fetch, the
         // qmeta/sigs/amended frame rewrites) — cache it for the batch's
         // lifetime (r17 optimization), released before the commit ends
-        val batch = amendStore
-          .join(ids.select("doc_id"), Seq("doc_id"), "left_semi")
+        val batch = store
+          .join(upserts, Seq("doc_id"), "left_semi")
           .select("doc_id", "lang", "text")
           .cache()
         // released in the finally below — a per-batch raise (e.g. the
-        // missing-payload require) must not leak the cached batch
+        // event-contract require) must not leak the cached batch
         try {
-        // an amendment EVENT whose id has no payload in the re-crawl
-        // store would otherwise vanish silently — a lost amendment is
-        // a correctness failure, not a skippable row. r18 (guide §2.6):
-        // the probe depends only on the batch ids — overlap it with the
-        // delta's own probes and enforce it before anything commits
-        val missingF = scala.concurrent.Future {
-          ids.select("doc_id")
-            .join(amendStore.select("doc_id"), Seq("doc_id"), "left_anti")
+        // the event contract: an upsert whose id has no payload would
+        // otherwise degrade to a silent takedown, and an id named by
+        // both ops would silently take the upsert — a lost or guessed
+        // event is a correctness failure, not a skippable row. r18
+        // (guide §2.6): the probe depends only on the batch events —
+        // overlap it with the delta's own probes and enforce it before
+        // anything commits
+        val badF = scala.concurrent.Future {
+          upserts.join(store.select("doc_id"), Seq("doc_id"), "left_anti")
+            .select(col("doc_id"),
+              lit("is an upsert with no row in the payload store"))
+            .unionAll(upserts
+              .join(ev.filter(col("is_delete")), Seq("doc_id"),
+                "left_semi")
+              .select(col("doc_id"),
+                lit("is named by both an upsert and a delete")))
             .limit(1).collect()
         }(scala.concurrent.ExecutionContext.Implicits.global)
         val docsCur = docs
@@ -1172,35 +1162,14 @@ object StreamOps {
           .join(probe(everAmended).withColumnRenamed("doc_id", "id2"),
             Seq("id2"), "left_anti")
           .unionByName(pairsNew.toDF("id1", "id2"))
-        val st = PQ.corpusUpsertState(docsCur, batch.select("doc_id"),
-          batch, cur.qmeta, cur.s2ids, cur.s3ids, cur.s4meta,
-          benchGrams, pairsEff, IncrementalDedup.banded(sigs))
+        val st = PQ.corpusUpsertState(docsCur, ids, batch, cur.qmeta,
+          cur.s2ids, cur.s3ids, cur.s4meta, benchGrams, pairsEff,
+          IncrementalDedup.banded(cur.sigs))
         // the delta phase ends here: corpusUpsertState's bounded
         // collects have materialized every decision set; what follows
         // is plan construction, materialized by the checkpoint writes
         val tDelta = (System.nanoTime() - tB0) / 1e9
-        val aq = PQ.qualityGate(batch)
-        val qmetaN = cur.qmeta
-          .join(probe(st.rIds), Seq("doc_id"), "left_anti")
-          .unionByName(aq.select(col("doc_id"), col("lang"),
-            col("n_tokens"), sha2(col("text"), 256).as("digest")))
-        val s2N = cur.s2ids
-          .join(probe(st.rIds ++ st.stolen), Seq("doc_id"), "left_anti")
-          .unionAll(probe(st.resurrected ++ st.insKeepers))
-        val s3N = cur.s3ids
-          .join(probe(st.rIds ++ st.stolen ++ st.doomedNow ++
-            st.newcomers), Seq("doc_id"), "left_anti")
-          .unionAll(probe(st.newcomers))
-        val s4N = st.s4keep.unionByName(st.s4new)
-        val sigsN = sigs
-          .join(probe(st.rIds ++ st.stolen)
-            .withColumnRenamed("doc_id", "id"), Seq("id"), "left_anti")
-          .unionAll(IncrementalDedup.signatures(
-            docsCur.join(probe(st.resurrected), Seq("doc_id"),
-              "left_semi"), "doc_id", "text"))
-          .unionAll(IncrementalDedup.signatures(
-            aq.join(probe(st.insKeepers), Seq("doc_id"), "left_semi"),
-            "doc_id", "text"))
+        val next = PQ.upsertRewrite(st, cur, batch, docsCur)
         val amendedN = amendedRows
           .join(probe(st.rIds), Seq("doc_id"), "left_anti")
           .unionByName(batch)
@@ -1210,41 +1179,37 @@ object StreamOps {
           for { a <- m(p._1); b <- m(p._2); if a != b }
             yield (math.min(a, b), math.max(a, b))
         }
-        val base = s"$out/b$batchId"
+        val base = out.resolve(s"b$batchId")
         // the batch must be complete before ANY state commits — await
-        // the overlapped payload probe at the commit barrier
-        val missing = scala.concurrent.Await.result(missingF,
+        // the overlapped contract probe at the commit barrier
+        val bad = scala.concurrent.Await.result(badF,
           scala.concurrent.duration.Duration.Inf)
-        require(missing.isEmpty,
-          s"streamAmend: amendment event for doc_id " +
-            s"${missing.headOption.map(_.getLong(0)).getOrElse(-1L)} " +
-            "has no payload in the amendment store — refusing to drop " +
-            "a takedown/re-crawl event on the floor")
+        require(bad.isEmpty,
+          s"streamCrud: doc_id ${bad.head.getLong(0)} " +
+            s"${bad.head.getString(1)} — refusing to drop or guess a " +
+            "takedown/re-crawl event")
         val tR0 = System.nanoTime()
         // the six state rewrites are independent plans over disjoint
         // dirs — materialize them concurrently (r17, guide §2.6): each
         // write's task set occupies a fraction of local[32], so the
         // sequential form paid six job-latency tails back to back.
         // r18: the per-batch secondary-store update (alsoPerBatch — the
-        // _full gate's IVF-PQ codes rewrite) is the seventh independent
+        // _full gates' IVF-PQ codes rewrite) is the seventh independent
         // write over its own dir; it joins the same concurrent wave
         // instead of running after the frames' tails
-        runConcurrently(Seq(
-          () => writeSnapshot(qmetaN, s"$base/qmeta"),
-          () => writeSnapshot(s2N, s"$base/s2ids"),
-          () => writeSnapshot(s3N, s"$base/s3ids"),
-          () => writeSnapshot(s4N, s"$base/s4meta"),
-          () => writeSnapshot(sigsN, s"$base/sigs"),
-          () => writeSnapshot(amendedN, s"$base/amended"),
-          () => alsoPerBatch(ids.select("doc_id"), batchId)))
-        cur = PQ.RetractFrames(
-          swapHot(cur.qmeta, spark.read.parquet(s"$base/qmeta")),
-          swapHot(cur.s2ids, spark.read.parquet(s"$base/s2ids")),
-          swapHot(cur.s3ids, spark.read.parquet(s"$base/s3ids")),
-          swapHot(cur.s4meta, spark.read.parquet(s"$base/s4meta")))
-        sigs = swapHot(sigs, spark.read.parquet(s"$base/sigs"))
+        val rebalance = st.inserted.nonEmpty
+        runConcurrently((next.named :+ ("amended" -> amendedN)).map {
+          case (name, df) =>
+            () => writeSnapshot(df, s"$base/$name", rebalance)
+        } :+ (() => alsoPerBatch(ids, batchId)))
+        cur.named.foreach(_._2.unpersist())
+        cur = PQ.CorpusFrames.read(spark, base.toString).map(_.cache())
         amendedRows = swapHot(amendedRows,
           spark.read.parquet(s"$base/amended"))
+        // nothing references the superseded generation once its
+        // successor is hot (a retried batch rewrites its own dir)
+        gen.filterNot(_ == base).foreach(deleteTree)
+        gen = Some(base)
         pairsNew = (pairsNew.flatMap(remap) ++ st.freshPairs).distinct
         everAmended = everAmended ++ st.rIds
         // the accumulated overlay must never silently reach corpus
@@ -1252,7 +1217,7 @@ object StreamOps {
         // — a deployment hitting this either compacts more often or
         // has an amendment volume that IS a batch rebuild
         require(everAmended.size.toLong + pairsNew.size <= maxOverlay,
-          s"streamAmend: accumulated overlay " +
+          s"streamCrud: accumulated overlay " +
             s"(${everAmended.size} amended ids + ${pairsNew.size} " +
             s"fresh pairs) exceeds maxOverlay=$maxOverlay — enable " +
             "or tighten compactEvery (the overlay fold) instead of " +
@@ -1261,25 +1226,31 @@ object StreamOps {
         // most expensive gate must decompose in the driver tail —
         // delta (the bounded upsert collects) vs the six state
         // rewrites' materialization + checkpoint I/O
-        System.err.println(f"[stream-amend] batch $batchId: delta " +
+        System.err.println(f"[stream-crud] batch $batchId: delta " +
           f"$tDelta%.2f s, state-rewrite+checkpoint " +
           f"${(System.nanoTime() - tR0) / 1e9}%.2f s " +
-          f"(${st.rIds.size} amended, ${st.freshPairs.size} fresh " +
-          f"pairs, overlay now ${everAmended.size}+${pairsNew.size})")
+          f"(${st.rIds.size} ids, ${st.inserted.size} inserted, " +
+          f"${st.freshPairs.size} fresh pairs, overlay now " +
+          f"${everAmended.size}+${pairsNew.size})")
         } finally batch.unpersist()
         ()
       }
       .start()
-    try idBatches.zipWithIndex.foreach { case (b, i) =>
+    try events.zipWithIndex.foreach { case (b, i) =>
       input.addData(b); q.processAllAvailable()
       // compaction fires on the driver BETWEEN committed batches (the
       // foreachBatch closure reads the folded vars on its next call)
       if (compactEvery > 0 && (i + 1) % compactEvery == 0) foldOverlay()
     } finally {
       q.stop()
-      amendStore.unpersist()
+      (cur.named.map(_._2) ++ Seq(staticPairs, amendedRows, store))
+        .foreach(_.unpersist())
+      // the run owns its dirs: only the last generation outlives it
+      if (gen.isEmpty) deleteTree(out)
+      else out.toFile.listFiles.map(_.toPath).filterNot(gen.contains)
+        .foreach(deleteTree)
     }
-    AmendStreamResult(PQ.corpusFinish(cur.s4meta),
+    CrudStreamResult(PQ.corpusFinish(cur.s4meta),
       everAmended.size.toLong, pairsNew.size.toLong, folds)
   }
 
@@ -1478,7 +1449,6 @@ object StreamOps {
     import graft.queries.{PipelineQueries => PQ}
     import graft.operators.IvfPq
     graft.functions.GraftFunctions.register(spark)
-    implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val docs = graft.sources.Tables.documents(spark, dir)
     val n = docs.agg(max(col("doc_id"))).head.getLong(0)
@@ -1495,19 +1465,8 @@ object StreamOps {
         col("embedding"))), Seq("__p"))
       .select((col("doc_id") + voff).as("vec_id"), col("embedding"))
     val base = PQ.ivfPqIndex(spark, dir)
-    // hot state between micro-batches (see streamAmendRun)
-    def swapHot(old: DataFrame, next: DataFrame): DataFrame = {
-      old.unpersist()
-      next.cache()
-    }
-    var (cur, benchGrams, pairs) = PQ.retractFramesAtRest(spark, dir)
-    cur = PQ.RetractFrames(cur.qmeta.cache(), cur.s2ids.cache(),
-      cur.s3ids.cache(), cur.s4meta.cache())
-    pairs = pairs.cache()
     val out = java.nio.file.Files
       .createTempDirectory("graft_sretractf").toString
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_sretractf_ckpt").toString
     // the at-rest pre-state a deployment holds when the takedown
     // stream starts: the index CONTAINS the victims' vectors
     var ix = IvfPq.append(base, twins, m = PQ.PqM, k = PQ.PqKCodes)
@@ -1532,44 +1491,16 @@ object StreamOps {
         .select("probe_id", "cand_id", "adc").cache()
       t.count(); t
     }
-    val input = MemoryStream[Long]
-    val q = input.toDF().toDF("doc_id").writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val st = PQ.corpusRetractState(docs,
-          batch.select("doc_id"), cur.qmeta, cur.s2ids, cur.s3ids,
-          cur.s4meta, benchGrams, pairs)
-        val next = PQ.retractRewrite(spark, st, cur)
+    val streamed = streamCrudRun(spark, dir,
+      batches.map(_.map(CrudEvent.delete)), PQ.noPayload(docs),
+      alsoPerBatch = { (ids, batchId) =>
         // the SAME events reach the vector store in the SAME batch
         val ixN = IvfPq.retract(ix,
-          batch.select((col("doc_id") + voff).as("vec_id")))
-        val b = s"$out/b$batchId"
-        // both stores' rewrites (four frames + the index codes) are
-        // independent plans over disjoint dirs — materialize them
-        // concurrently (r17, guide §2.6)
-        // r18 A/B: the pure-retract frames never COMPOUND (anti-joins
-        // shed rows; measured 1-9 files/frame over the replay), so the
-        // snapshot rebalance is pure shuffle overhead here — plain
-        // writes measured faster (6.3 vs 8.0 s family mean)
-        runConcurrently(Seq(
-          () => next.qmeta.write.mode("overwrite").parquet(s"$b/qmeta"),
-          () => next.s2ids.write.mode("overwrite").parquet(s"$b/s2ids"),
-          () => next.s3ids.write.mode("overwrite").parquet(s"$b/s3ids"),
-          () => next.s4meta.write.mode("overwrite").parquet(s"$b/s4meta"),
-          () => ixN.codes.write.mode("overwrite").parquet(s"$b/codes")))
-        cur = PQ.RetractFrames(
-          swapHot(cur.qmeta, spark.read.parquet(s"$b/qmeta")),
-          swapHot(cur.s2ids, spark.read.parquet(s"$b/s2ids")),
-          swapHot(cur.s3ids, spark.read.parquet(s"$b/s3ids")),
-          swapHot(cur.s4meta, spark.read.parquet(s"$b/s4meta")))
+          ids.select((col("doc_id") + voff).as("vec_id")))
+        ixN.codes.write.mode("overwrite").parquet(s"$out/b$batchId/codes")
         ix = IvfPq.Index(ix.centroids, ix.books,
-          spark.read.parquet(s"$b/codes"), ix.corpusId)
-        ()
-      }
-      .start()
-    try batches.foreach { b => input.addData(b); q.processAllAvailable() }
-    finally q.stop()
-    val streamed = PQ.corpusFinish(cur.s4meta)
+          spark.read.parquet(s"$out/b$batchId/codes"), ix.corpusId)
+      }).manifest
     val oneShot = Await.result(oneShotF, Duration.Inf)
     val mEq = streamed.exceptAll(oneShot)
       .unionAll(oneShot.exceptAll(streamed)).isEmpty
@@ -1590,6 +1521,17 @@ object StreamOps {
       .unionByName(probeRows)
   }
 
+  /** Streaming upsert maintenance gate ([[StreamUpsert]]): three
+    * sequential CDC delta batches — full insert, then update-%5 /
+    * delete-%7, then update-%3 / delete-%11 — stream through the
+    * foreachBatch merge sink; returns the final committed snapshot.
+    * The fixture's text derives from `md5(doc_id)` so the DuckDB oracle
+    * reconstructs the final state closed-form (delete-wins, later
+    * upserts replace, deletes resurrect on re-upsert). The delta
+    * batches are driver-generated fixture rows (MemoryStream's
+    * contract, same as every streaming spec — bounded by the doc-id
+    * range); production deltas arrive from a real source and the sink
+    * path is identical. */
   def streamUpsert(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

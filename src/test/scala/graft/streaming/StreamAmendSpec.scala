@@ -21,7 +21,11 @@ import graft.SparkSpec
   *    at-least-once tolerance a streaming consumer needs; true
   *    re-amendment with NEW content arrives as a fresh event whose
   *    payload the re-crawl store serves — the machinery treats prior
-  *    amendments as ordinary at-rest content either way) */
+  *    amendments as ordinary at-rest content either way)
+  *
+  * The same driver ([[StreamOps.streamCrudRun]]) takes deletes as
+  * upserts with no payload, so the last two cases pin its event
+  * contract and a mixed amend/delete stream. */
 class StreamAmendSpec extends SparkSpec {
   import spark.implicits._
 
@@ -113,5 +117,69 @@ class StreamAmendSpec extends SparkSpec {
       graft.queries.PipelineQueries.corpusAmendFrom(spark, dir,
         amendments()))
     assert(redelivered == once, s"redelivered $redelivered\nonce $once")
+  }
+
+  private def fromScratch(world: org.apache.spark.sql.DataFrame) =
+    graft.queries.PipelineQueries.corpusEnd2EndFrom(world).collect()
+      .map(x => (x.getLong(0), x.getLong(1), x.getLong(2))).toSet
+
+  test("event contract: an upsert with no payload raises naming the " +
+      "id, a delete needs no payload, and an id named by both ops in " +
+      "one batch raises instead of picking one") {
+    import StreamOps.CrudEvent.{delete, upsert}
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_scrud_contract").toString
+    corpus().write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    def raised(events: Seq[Seq[StreamOps.CrudEvent]]): Seq[String] = {
+      val e = intercept[Exception] {
+        StreamOps.streamCrudRun(spark, dir, events, amendments())
+      }
+      def causes(t: Throwable): Seq[Throwable] =
+        if (t == null) Seq.empty else t +: causes(t.getCause)
+      causes(e).flatMap(c => Option(c.getMessage))
+    }
+    // 400 has no row in the payload store
+    val missing = raised(Seq(Seq(upsert(60L), upsert(400L))))
+    assert(missing.exists(_.contains(
+      "doc_id 400 is an upsert with no row in the payload store")),
+      missing.toString)
+    val deleted = StreamOps.streamCrudRun(spark, dir,
+      Seq(Seq(delete(400L))), amendments()).manifest.collect()
+      .map(x => (x.getLong(0), x.getLong(1), x.getLong(2))).toSet
+    assert(deleted == fromScratch(corpus().filter(col("doc_id") =!= 400L)),
+      deleted.toString)
+    val both = raised(Seq(Seq(upsert(60L), delete(60L))))
+    assert(both.exists(_.contains(
+      "doc_id 60 is named by both an upsert and a delete")), both.toString)
+  }
+
+  test("a mixed CRUD stream (amend a keeper, delete it and an untouched " +
+      "keeper, amend a third id) lands on the from-scratch chain of the " +
+      "final world, in both commuting batch orders") {
+    import StreamOps.CrudEvent.{delete, upsert}
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_scrud_mixed").toString
+    corpus().write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    // batch 1: 60 steals 80's keepership; batch 2 deletes the thief
+    // (80 must re-elect) and the untouched keeper 400; batch 3 amends
+    // 205, independent of both
+    val b1 = Seq(upsert(60L))
+    val b2 = Seq(delete(60L), delete(400L))
+    val b3 = Seq(upsert(205L))
+    def streamed(batches: Seq[StreamOps.CrudEvent]*) =
+      StreamOps.streamCrudRun(spark, dir, batches, amendments())
+        .manifest.collect()
+        .map(x => (x.getLong(0), x.getLong(1), x.getLong(2))).toSet
+    val world = corpus().filter(!col("doc_id").isin(60L, 400L))
+      .join(amendments().filter(col("doc_id") === 205L)
+        .select(col("doc_id"), col("text").as("__new")),
+        Seq("doc_id"), "left")
+      .select(col("doc_id"), col("lang"),
+        coalesce(col("__new"), col("text")).as("text"))
+    val want = fromScratch(world)
+    val inOrder = streamed(b1, b2, b3)
+    assert(inOrder == want, s"streamed $inOrder\nfrom-scratch $want")
+    val amendFirst = streamed(b3, b1, b2)
+    assert(amendFirst == want, s"streamed $amendFirst\nfrom-scratch $want")
   }
 }
