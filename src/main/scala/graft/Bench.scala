@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: one JSON line with per-query wall seconds at
   * SPARK_GRAFT_SF_DIR (default sf0.1), local[32] posture per BASELINE.md. */
 object Bench {
@@ -176,11 +174,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
+    val spark = graft.api.Engine.builder(s"local[$cpus]", cpus.toInt)
       // r18 (guide §1/§4 "measure steady-state operator cost"): the
       // generated-class cache defaults to 100 entries, which a ~400-
       // query suite (~2000+ codegen units) evicts wholesale — the
@@ -193,10 +187,8 @@ object Bench {
       // core count so the driver's two-cpus runs stay comparable.
       .config("spark.sql.codegen.cache.maxEntries",
         sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8000"))
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
 
     // Warm the whole suite at the smallest SF first: codegen caches by
     // generated source and the query shapes are identical across SFs, so

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Per-round quality artifact for the realistic dedup + sketch gates —
@@ -65,7 +65,6 @@ object DedupQualityBench {
     * pigeonhole candidate generation (complete by theorem at ≤ 3
     * flips over 4 chunks; what this measures is bucket-cap loss). */
   def simhashTruth(docs: DataFrame, maxHamming: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val sigs = docs.select(col("doc_id").as("id"),
       graft.functions.GraftFunctions.simhash64(
         array_distinct(split(lower(col("text")), "\\s+"))).as("sim"))
@@ -79,7 +78,6 @@ object DedupQualityBench {
   /** Brute-force cosine ≥ threshold over all embedding pairs — ground
     * truth for the hyperplane-LSH semantic path. */
   def semanticTruth(emb: DataFrame, threshold: Double): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     emb.select(col("vec_id").as("a"), col("embedding").as("va"))
       .join(broadcast(emb.select(col("vec_id").as("b"),
         col("embedding").as("vb"))), col("a") < col("b"))
@@ -109,15 +107,8 @@ object DedupQualityBench {
     val sfDir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.api.Engine.session(s"local[$cpus]", cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
     import graft.operators.{Dedup, SetSimJoin}
     import graft.queries.{DedupQueries => DQ}
     import graft.sources.Tables
@@ -252,7 +243,6 @@ object DedupQualityBench {
     // every band at or above the gate threshold, and the sub-threshold
     // bands show the raw hyperplane bucketing law
     val semMutTruth = {
-      graft.functions.GraftFunctions.register(spark)
       semMut.select(col("vec_id").as("a"), col("embedding").as("va"))
         .join(broadcast(semMut.select(col("vec_id").as("b"),
           col("embedding").as("vb"))), col("a") < col("b"))

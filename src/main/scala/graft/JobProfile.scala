@@ -3,7 +3,6 @@ package graft
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Per-query job/stage/task profiler — the optimization-round "measure
   * first" tool for the long-tail question (r17 verdict #1): a 0.3–0.6 s
@@ -23,18 +22,13 @@ object JobProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = graft.api.Engine.builder(s"local[$cpus]", cpus.toInt)
       .config("spark.sql.adaptive.enabled",
         (!sys.env.get("SPARK_GRAFT_PROFILE_AQE").contains("0")).toString)
       .config("spark.sql.codegen.cache.maxEntries",
         sys.env.getOrElse("SPARK_GRAFT_PROFILE_CODEGEN_CACHE", "100"))
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
 
     val jobs = new AtomicInteger(0)
     val stages = new AtomicInteger(0)

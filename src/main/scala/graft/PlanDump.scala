@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps `explain("formatted")` for the flagship queries into PLANS.md —
   * reviewable evidence that pushdown/broadcast/top-k/partial-agg shapes
   * hold (the same properties PlanShapeSpec asserts mechanically).
@@ -72,14 +70,8 @@ object PlanDump {
 
   def main(args: Array[String]): Unit = {
     val sf = "/root/testdata/sf0.01"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.api.Engine.session("local[8]", 8)
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
 
     val sb = new StringBuilder
     sb.append("# PLANS — physical plans of flagship queries (sf0.01)\n\n")

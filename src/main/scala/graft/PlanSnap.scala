@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps `explain("formatted")` for a named list of queries into
   * per-query files — the optimization-round evidence trail
   * (plans/r17/<query>_before.txt / _after.txt).
@@ -25,14 +23,8 @@ object PlanSnap {
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "before")
     val names = sys.env.getOrElse("SPARK_GRAFT_PLAN_QUERIES", "")
       .split(",").map(_.trim).filter(_.nonEmpty)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.api.Engine.session("local[8]", 8)
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
       SparkEntry.queries.get(name) match {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale dress-rehearsal: replicate the sf0.1 tables Nx (ids offset so
@@ -55,11 +55,7 @@ object ScaleBench {
   def main(args: Array[String]): Unit = {
     val factor = args.headOption.map(_.toInt).getOrElse(8)
     val sf = "/root/testdata/sf0.1"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
+    val spark = graft.api.Engine.builder("local[32]", 32)
       // the drill multiplies data ×N under a FIXED session partition
       // count — at 32× a wedge-scale shuffle forces GB-sized spilling
       // partitions that a real cluster would never see. Give AQE the
@@ -67,10 +63,8 @@ object ScaleBench {
       // which is exactly how a production session is configured.
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
         "256")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
 
     def replicate(df: DataFrame, idCols: Seq[String], stride: Long): DataFrame =
       df.crossJoin(

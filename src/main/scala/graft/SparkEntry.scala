@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.functions.GraftFunctions
 import graft.queries._
 
 /** Driver contract — see /root/repo/SURVEY.md §2 + §7.
@@ -15,10 +16,23 @@ import graft.queries._
 object SparkEntry {
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
-  def entry(spark: SparkSession): DataFrame =
+  def entry(spark: SparkSession): DataFrame = {
+    GraftFunctions.register(spark)
     RelationalQueries.q1Agg(spark, "/root/testdata/sf0.001")
+  }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** Each query first attaches the engine surface
+    * ([[GraftFunctions.register]], a no-op on a graft session): the
+    * driver may hand in a session of its own. */
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    gates.map { case (name, q) =>
+      name -> ((s: SparkSession, d: String) => {
+        GraftFunctions.register(s)
+        q(s, d)
+      })
+    }
+
+  private def gates: Map[String, (SparkSession, String) => DataFrame] = Map(
     // scans / json (E1, E3)
     "q_scan_count" -> RelationalQueries.scanCount,
     "q_json_extract" -> RelationalQueries.jsonExtract,

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** State-store profile of every streaming replay: per-query rows held,
   * rows evicted, memory, and commit time from
   * `StreamingQueryProgress.stateOperators` — the ground truth for "the
@@ -15,14 +13,8 @@ object StreamStateProfile {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.api.Engine.session("local[32]", 32)
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
 
     graft.streaming.StreamOps.replayPlans(spark, sfDir)
       .foreach { case (name, plan, mode) =>

@@ -2,48 +2,22 @@ package graft.api
 
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 
-import graft.functions._
+import graft.functions.GraftFunctions
 
-/** Injectable extensions: `--conf spark.sql.extensions=graft.api.GraftExtensions`
-  * registers every engine function at session build, cluster-wide, without
-  * driver code changes. */
+/** The whole engine surface as one session extension: every function of
+  * the [[GraftFunctions]] table, the planner strategies for the custom
+  * TopKPerGroup / AsOfJoin nodes, the filter pushdown rules through them
+  * and the materialized-summary rewrite. `Engine.builder` applies it; on a
+  * cluster `--conf spark.sql.extensions=graft.api.GraftExtensions` does
+  * the same with no driver code. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-    def info(name: String) =
-      new ExpressionInfo(classOf[GraftExtensions].getName, name)
-    e.injectFunction((FunctionIdentifier("cosine_sim"), info("cosine_sim"),
-      (es: Seq[Expression]) => CosineSimilarity(es(0), es(1))))
-    e.injectFunction((FunctionIdentifier("vec_dot"), info("vec_dot"),
-      (es: Seq[Expression]) => DotProduct(es(0), es(1))))
-    e.injectFunction((FunctionIdentifier("vec_l2"), info("vec_l2"),
-      (es: Seq[Expression]) => L2Distance(es(0), es(1))))
-    e.injectFunction((FunctionIdentifier("riff_encode"), info("riff_encode"),
-      (es: Seq[Expression]) => RiffEncode(es(0), es(1))))
-    e.injectFunction((FunctionIdentifier("riff_decode"), info("riff_decode"),
-      (es: Seq[Expression]) => RiffDecode(es(0))))
-    e.injectFunction((FunctionIdentifier("minhash_sig"), info("minhash_sig"),
-      // Number.intValue, not asInstanceOf[Int]: SQL integer literals can
-      // arrive as BIGINT (same pattern as minhash_text/kmv_distinct below)
-      (es: Seq[Expression]) => MinHashSig(es(0),
-        es(1).eval().asInstanceOf[Number].intValue())))
-    e.injectFunction((FunctionIdentifier("simhash64"), info("simhash64"),
-      (es: Seq[Expression]) => SimHash64(es(0))))
-    e.injectFunction((FunctionIdentifier("vec_norm"), info("vec_norm"),
-      (es: Seq[Expression]) => VecNorm(es(0))))
-    e.injectFunction((FunctionIdentifier("minhash_text"), info("minhash_text"),
-      (es: Seq[Expression]) => MinHashText(es(0),
-        es(1).eval().asInstanceOf[Number].intValue(),
-        es(2).eval().asInstanceOf[Number].intValue())))
-    e.injectFunction((FunctionIdentifier("kmv_distinct"), info("kmv_distinct"),
-      (es: Seq[Expression]) => KmvDistinct(es(0),
-        es(1).eval().asInstanceOf[Number].intValue())
-        .toAggregateExpression()))
-    // the custom operator stack rides the extension too: a session built
-    // with spark.sql.extensions=graft.api.GraftExtensions plans
-    // TopKPerGroup / AsOfJoin nodes and pushes filters through them
-    // without any experimental-API wiring
+    import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+    GraftFunctions.builders.foreach { case (name, build) =>
+      e.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, name), build))
+    }
     e.injectPlannerStrategy(_ => graft.plans.TopKPerGroupStrategy)
     e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
     e.injectOptimizerRule(_ => graft.plans.PushFilterThroughTopKPerGroup)
@@ -52,23 +26,26 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   }
 }
 
-/** Facade: builds a session configured the way the engine is benchmarked
-  * and registers the function surface. The config block is the 100 TB
-  * posture scaled to one machine — on a cluster only the master/memory
-  * lines change. */
+/** The one way a session is built. A graft session comes from
+  * `Engine.session` / `Engine.builder`, from the
+  * `spark.sql.extensions=graft.api.GraftExtensions` conf, or from
+  * [[GraftFunctions.register]] on a session built elsewhere; library code
+  * assumes one of the three and registers nothing on the fly.
+  *
+  * The config block is the 100 TB posture scaled to one machine — on a
+  * cluster only the master/memory lines change. */
 object Engine {
 
-  def session(master: String = "local[32]",
-      shufflePartitions: Int = 32): SparkSession = {
-    val s = SparkSession.builder()
+  /** The common posture plus [[GraftExtensions]]; callers add their own
+    * `.config` lines. `withExtensions` composes with a user's own
+    * `spark.sql.extensions`. */
+  def builder(master: String = "local[32]",
+      shufflePartitions: Int = 32): SparkSession.Builder =
+    SparkSession.builder()
       .master(master)
       .appName("graft")
       .config("spark.sql.shuffle.partitions", shufflePartitions)
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.parquet.filterPushdown", "true")
       // events.ts is parquet INT64 TIMESTAMP(NANOS); set at session build
       // so a user reading events before any Tables call can't race the
       // runtime flag Tables.events also sets (see USAGE.md)
@@ -78,8 +55,9 @@ object Engine {
       .config("spark.sql.warehouse.dir",
         sys.props("java.io.tmpdir") + "/graft-warehouse")
       .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    GraftFunctions.register(s)
-    s
-  }
+      .withExtensions(new GraftExtensions)
+
+  def session(master: String = "local[32]",
+      shufflePartitions: Int = 32): SparkSession =
+    builder(master, shufflePartitions).getOrCreate()
 }

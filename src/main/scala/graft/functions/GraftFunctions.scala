@@ -1,14 +1,16 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftPlanBridge, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.functions.call_function
 
 /** Public function surface of the engine.
   *
-  * Registration goes through the session's FunctionRegistry so every
-  * function is callable from SQL (`SELECT cosine_sim(a, b) ...`) and from
-  * the DataFrame API via the `Column` helpers below (which route through
-  * `call_function`, keeping us off private Column internals).
+  * `builders` is the one function table: [[graft.api.GraftExtensions]]
+  * injects it into every graft session, so every function is callable
+  * from SQL (`SELECT cosine_sim(a, b) ...`) and from the DataFrame API via
+  * the `Column` helpers below (which route through `call_function`,
+  * keeping us off private Column internals).
   */
 object GraftFunctions {
 
@@ -38,7 +40,7 @@ object GraftFunctions {
       s"$fn expects a string literal parameter, got $other")
   }
 
-  private val builders: Map[String, Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
+  private[graft] val builders: Map[String, Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
       org.apache.spark.sql.catalyst.expressions.Expression] = Map(
     "cosine_sim" -> (es => CosineSimilarity(es(0), es(1))),
     "vec_dot" -> (es => DotProduct(es(0), es(1))),
@@ -146,22 +148,20 @@ object GraftFunctions {
     "bitmap_or_count" -> (es => BitmapOrCount(es(0), es(1))),
   )
 
-  // sessions already registered — registration is called from every
-  // operator that emits SQL-surface functions, so without this cache a
-  // 200-query bench re-registers ~40 functions per query and the whole
-  // stderr tail is "replaced a previously registered function" WARN spam
-  private val registered =
-    java.util.Collections.newSetFromMap(
-      new java.util.concurrent.ConcurrentHashMap[SparkSession, java.lang.Boolean]())
-
-  /** Idempotent per-session registration of all engine functions. */
-  def register(spark: SparkSession): Unit =
-    if (registered.add(spark)) {
+  /** The one late-attach seam, for a session built without
+    * [[graft.api.GraftExtensions]] (the driver's own, say): registers this
+    * table and applies the extension's strategies and rules. A no-op when
+    * the session's own function registry already resolves every name, as
+    * it does on every `Engine.session`. */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    if (!builders.keys.forall(n => registry.functionExists(FunctionIdentifier(n)))) {
       builders.foreach { case (name, b) =>
-        spark.sessionState.functionRegistry
-          .createOrReplaceTempFunction(name, b, "built-in")
+        registry.createOrReplaceTempFunction(name, b, "built-in")
       }
+      GraftPlanBridge.attach(new graft.api.GraftExtensions, spark)
     }
+  }
 
   def cosineSim(a: Column, b: Column): Column = call_function("cosine_sim", a, b)
   def vecDot(a: Column, b: Column): Column = call_function("vec_dot", a, b)

@@ -90,7 +90,6 @@ object AnnSearch {
       corpusId: String = "vec_id", corpusVec: String = "embedding",
       probeId: String = "vec_id", probeVec: String = "embedding")
       : DataFrame = {
-    GraftFunctions.register(corpus.sparkSession)
     guardProbes(probes, "bruteForceTopK")
     val p = probes.select(col(probeId).as("probe_id"),
       col(probeVec).as("pvec"))
@@ -125,7 +124,6 @@ object AnnSearch {
   def hardNegatives(corpus: DataFrame, anchors: DataFrame, k: Int,
       corpusId: String = "vec_id", corpusVec: String = "embedding",
       labelCol: String = "label"): DataFrame = {
-    GraftFunctions.register(corpus.sparkSession)
     guardProbes(anchors, "hardNegatives")
     val a = anchors.select(col(corpusId).as("anchor_id"),
       col(corpusVec).as("avec"), col(labelCol).as("anchor_label"))
@@ -216,7 +214,6 @@ object AnnSearch {
       corpusId: String = "vec_id", corpusVec: String = "embedding",
       probeId: String = "vec_id", probeVec: String = "embedding")
       : DataFrame = {
-    GraftFunctions.register(corpus.sparkSession)
     val planes = hyperplanes(tables, bits, dim, seed)
 
     // ONE scan: all tables' bucket ids computed in a single projection,
@@ -289,7 +286,6 @@ object AnnSearch {
     * Returns (centroid_id, centvec: array<double>). */
   def kmeansCentroids(corpus: DataFrame, vecCol: String, idCol: String,
       lists: Int, iters: Int): DataFrame = {
-    GraftFunctions.register(corpus.sparkSession)
     require(lists > 0, "lists must be positive")
     // Seed from the `lists` lowest DISTINCT content hashes, not raw ids:
     // on a duplicate-heavy corpus id-hash seeding wastes seeds on copies
@@ -337,7 +333,6 @@ object AnnSearch {
       corpusId: String = "vec_id", corpusVec: String = "embedding",
       probeId: String = "vec_id", probeVec: String = "embedding")
       : DataFrame = {
-    GraftFunctions.register(corpus.sparkSession)
     // trained inverted-file lists; cache: reused by corpus + probe
     // assignment (at production scale this is the persisted index)
     val centroids = kmeansCentroids(corpus, corpusVec, corpusId,

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.AttributeReference
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.plans.{AsOfJoinNode, AsOfJoinStrategy, PushFilterThroughAsOfJoin}
+import graft.plans.AsOfJoinNode
 
 /** As-of join (SURVEY §2B E12): for each left row, attach the latest right
   * row with `right.ts <= left.ts` within the same key.
@@ -76,8 +76,6 @@ object AsOfJoin {
       tolerance: Option[String] = None): DataFrame = {
     require(keys.nonEmpty, "as-of join needs at least one key column")
     val spark = left.sparkSession
-    GraftPlanBridge.addStrategy(spark, AsOfJoinStrategy)
-    GraftPlanBridge.addOptimization(spark, PushFilterThroughAsOfJoin)
     val lPlan = GraftPlanBridge.logicalPlan(left)
     // prune the right side to what the operator consumes (the
     // column-pruning boundary for the build-side scan) and re-alias every

@@ -188,7 +188,6 @@ object BpeTrain {
     * with the learned table, not with thousands of speculative rules. */
   def encode(df: DataFrame, textCol: String,
       merges: Seq[(String, String)]): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     df.withColumn("syms",
       graft.functions.GraftFunctions.bpeEncode(
         lower(nulGuard(col(textCol), "encode")), merges))

@@ -57,7 +57,6 @@ object Decontam {
       textCol: String, n: Int = 5, mBits: Int = 1 << 20, k: Int = 3)
       : DataFrame = {
     import graft.functions.GraftFunctions
-    GraftFunctions.register(corpus.sparkSession)
     val bf = bench
       .select(explode(ngrams(col(textCol), n)).as("ng")).distinct()
       .agg(GraftFunctions.bloomAgg(col("ng"), mBits, k).as("bf"))
@@ -93,7 +92,6 @@ object Decontam {
   def semanticOverlap(corpus: DataFrame, bench: DataFrame, idCol: String,
       vecCol: String, threshold: Double): DataFrame = {
     import graft.functions.GraftFunctions
-    GraftFunctions.register(corpus.sparkSession)
     val benchRow = bench.agg(collect_list(col(vecCol)).as("__bvecs"))
     corpus.select(col(idCol), col(vecCol).as("__v"))
       .join(broadcast(benchRow))
@@ -117,7 +115,6 @@ object Decontam {
       textCol: String, n: Int = 5, mBits: Int = 1 << 20, k: Int = 3)
       : DataFrame = {
     import graft.functions.GraftFunctions
-    GraftFunctions.register(corpus.sparkSession)
     val hashes = GraftFunctions.ngramHashes(lower(col(textCol)), n)
     val bf = bench.select(explode(hashes).as("ngh")).distinct()
       .agg(GraftFunctions.bloomAgg(col("ngh"), mBits, k).as("bf"))
@@ -139,7 +136,6 @@ object Decontam {
     * carries 8-byte keys. Spec-checked equivalent to [[overlap]]. */
   def overlapHashed(corpus: DataFrame, bench: DataFrame, idCol: String,
       textCol: String, n: Int = 5): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     // unbound column — resolves against whichever frame selects it
     val hashes = graft.functions.GraftFunctions
       .ngramHashes(lower(col(textCol)), n)

@@ -67,7 +67,6 @@ object Dedup {
       numHashes: Int = 32, bands: Int = 8, threshold: Double = 0.5,
       maxBucket: Int = 300): DataFrame = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val r = numHashes / bands
     // signatures are reused by the banding pass and twice by the verify
     // join-back — materialize once (tiny: id + numHashes longs per doc; at
@@ -116,7 +115,6 @@ object Dedup {
   def simhashNearDup(df: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 3, maxBucket: Int = 2000): DataFrame = {
     require(maxHamming <= 3, "4 chunks pigeonhole supports <= 3 bit flips")
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val sigs = df.select(col(idCol).as("id"), simhash(col(textCol)).as("sim"))
       .cache()
     // candidates on (chunk, chunk_val, id, sim) — sim is one long, cheap
@@ -337,7 +335,6 @@ object Dedup {
   def semanticCandidates(df: DataFrame, idCol: String, vecCol: String,
       tables: Int = 4, bits: Int = 12, dim: Int = 64, seed: Long = 42L,
       maxBucket: Int = 2000): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val planes = AnnSearch.hyperplanes(tables, bits, dim, seed)
     val bucketed = df.select(col(idCol).as("id"),
         posexplode(array((0 until tables).map(t =>
@@ -378,7 +375,6 @@ object Dedup {
   def semanticNearDupKmeans(df: DataFrame, idCol: String, vecCol: String,
       threshold: Double, numLists: Int = 200, kmeansIters: Int = 2,
       maxList: Int = 2000): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val cents = AnnSearch.kmeansCentroids(df, vecCol, idCol,
       numLists, kmeansIters).cache()
     val centArr = AnnSearch.centroidRow(cents)
@@ -490,7 +486,6 @@ object Dedup {
     * [[AnnSearch.hyperplaneBuckets]]). */
   def embeddingNearDup(df: DataFrame, idCol: String, vecCol: String,
       probeMax: Long, threshold: Double): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val a = df.filter(col(idCol) < probeMax)
       .select(col(idCol).as("a"), col(vecCol).as("va"))
     val b = df.select(col(idCol).as("b"), col(vecCol).as("vb"))

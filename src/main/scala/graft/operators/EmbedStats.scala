@@ -43,7 +43,6 @@ object EmbedStats {
       maxDim: Int = 128, maxAbsQ: Int = 512): DataFrame = {
     require(grid > 0, s"covariance: grid must be positive: $grid")
     require(maxAbsQ > 0, s"covariance: maxAbsQ must be positive: $maxAbsQ")
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val base = df
       .select(when(col(vecCol).isNull, raise_error(lit(

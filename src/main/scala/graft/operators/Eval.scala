@@ -650,7 +650,6 @@ object Eval {
   def bleu(df: DataFrame, idCol: String, candCol: String,
       refCol: String, maxN: Int = 4): DataFrame = {
     require(maxN >= 1 && maxN <= 8, s"maxN must be in [1,8]: $maxN")
-    graft.functions.GraftFunctions.register(df.sparkSession)
     // one kernel call per row BEFORE the exchange, so only (id, stats)
     // longs shuffle; the window guard rides that exchange (the pairToks
     // precedent: a duplicate pair id would silently pool counts)

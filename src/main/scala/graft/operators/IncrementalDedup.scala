@@ -31,7 +31,6 @@ object IncrementalDedup {
     * by one is probe-compatible with the other. */
   def signatures(df: DataFrame, idCol: String, textCol: String,
       numHashes: Int = 32): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     df.select(col(idCol).as("id"),
       graft.functions.GraftFunctions.minhashText(col(textCol), numHashes)
         .as("sig"))

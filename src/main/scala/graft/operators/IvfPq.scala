@@ -46,7 +46,6 @@ object IvfPq {
       vecCol: String = "embedding", lists: Int = 20,
       kmeansIters: Int = 2, m: Int = 8, k: Int = 16, pqIters: Int = 2,
       dim: Int = 64): Index = {
-    GraftFunctions.register(corpus.sparkSession)
     val centroids = AnnSearch.kmeansCentroids(corpus, vecCol, idCol,
       lists, kmeansIters).cache()
     // list assignment: per-row argmax over the broadcast centroid set —
@@ -148,7 +147,6 @@ object IvfPq {
     * `m`/`k` must match the build (the codes table's geometry). */
   def append(index: Index, batch: DataFrame, vecCol: String = "embedding",
       m: Int = 8, k: Int = 16): Index = {
-    GraftFunctions.register(batch.sparkSession)
     val idCol = index.corpusId
     val assigned = batch
       .select(col(idCol).as("__id"), col(vecCol).as("__vec"))
@@ -223,7 +221,6 @@ object IvfPq {
     * @return (centroid_id, n_assigned, drift_cos) */
   def centroidDrift(index: Index, corpus: DataFrame,
       vecCol: String = "embedding"): DataFrame = {
-    GraftFunctions.register(corpus.sparkSession)
     val idCol = index.corpusId
     corpus.select(col(idCol), col(vecCol))
       .join(index.codes.select(col(idCol), col("centroid_id")), idCol)
@@ -241,7 +238,6 @@ object IvfPq {
   def search(index: Index, probes: DataFrame, k: Int, nprobe: Int = 4,
       probeId: String = "vec_id", probeVec: String = "embedding",
       m: Int = 8, kCodes: Int = 16): DataFrame = {
-    GraftFunctions.register(probes.sparkSession)
     AnnSearch.guardProbes(probes, "IvfPq.search")
     val cbRow = Pq.flatRow(index.books)
     // nprobe nearest lists per probe, selected INSIDE the row: sims to

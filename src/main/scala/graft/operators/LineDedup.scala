@@ -54,7 +54,6 @@ object LineDedup {
       minDocs: Int = 2, keepFirst: Boolean = true, sep: String = "\n",
       hasher: Column => Column = xxhash64(_)): DataFrame = {
     require(minDocs >= 2, s"minDocs must be >= 2, got $minDocs")
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val base = df.select(col(idCol), col(linesCol).as("__ln"))
     // (id, position, hash) — the only shape line content ever shuffles in
     val lines = base

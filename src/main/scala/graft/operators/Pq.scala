@@ -61,7 +61,6 @@ object Pq {
   def trainCodebooks(corpus: DataFrame, idCol: String, vecCol: String,
       m: Int = 8, k: Int = 16, iters: Int = 2, dim: Int = 64): DataFrame = {
     require(dim % m == 0, "m must divide dim")
-    GraftFunctions.register(corpus.sparkSession)
     // deterministic init: subvectors of the first k ids, coded 0..k-1
     var books = corpus.orderBy(col(idCol)).limit(k)
       .select(col(idCol).as("iid"), col(vecCol))
@@ -114,7 +113,6 @@ object Pq {
     * projection, no shuffle. Returns df's columns + `pq_codes`. */
   def encode(df: DataFrame, vecCol: String, books: DataFrame,
       m: Int = 8, k: Int = 16): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
     df.join(broadcast(flatRow(books)))
       .withColumn("pq_codes",
         GraftFunctions.pqEncode(col(vecCol), col("cb"), m, k))
@@ -141,7 +139,6 @@ object Pq {
       k: Int, corpusId: String = "vec_id", probeId: String = "vec_id",
       probeVec: String = "embedding", m: Int = 8, kCodes: Int = 16)
       : DataFrame = {
-    GraftFunctions.register(codes.sparkSession)
     AnnSearch.guardProbes(probes, "Pq.adcTopK")
     val p = probes.join(broadcast(flatRow(books)))
       .select(col(probeId).as("probe_id"),

@@ -57,7 +57,6 @@ object Profile {
     * p90_group, p99_group, top_keys array<string>). */
   def skewReport(df: DataFrame, keyCol: String, topK: Int = 10)
       : DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val counts = df.groupBy(col(keyCol)).agg(count(lit(1)).as("n"))
     val stats = counts.agg(
       count(lit(1)).as("n_groups"),

@@ -54,7 +54,6 @@ object RandomProjection {
     * formulation computed with a lambda dispatch per (j, i) pair. */
   def project(df: DataFrame, vecCol: String, inDim: Int, outDim: Int,
       salt: String = "graft", outCol: String = "proj"): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val flat = typedlit(signMatrix(inDim, outDim, salt).flatten)
     df.withColumn(outCol,
       graft.functions.GraftFunctions.randProject(col(vecCol), flat, outDim))

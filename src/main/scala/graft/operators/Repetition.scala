@@ -35,7 +35,6 @@ object Repetition {
   def signals(df: DataFrame, idCol: String, textCol: String,
       maxDupBigramFrac: Double = 0.3, maxTopBigramFrac: Double = 0.2)
       : DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     def stats(n: Int) = graft.functions.GraftFunctions
       .ngramRepStats(lower(col(textCol)), n)
     def dupFrac(s: Column): Column =
@@ -93,7 +92,6 @@ object Repetition {
   def removeDupSpans(df: DataFrame, idCol: String, textCol: String,
       n: Int = 8, hasher: Column => Column = xxhash64(_)): DataFrame = {
     require(n >= 2, s"span length must be >= 2 tokens, got $n")
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val base = df.select(col(idCol),
       split(lower(col(textCol)), "\\s+").as("__tk"))
     // sequence(0, size-n) flips to a DESCENDING range when size < n —
@@ -141,7 +139,6 @@ object Repetition {
     * needed. */
   def dupSpanFraction(df: DataFrame, idCol: String, textCol: String,
       n: Int = 8): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val spans = df.select(col(idCol).as("doc_id"),
       explode(graft.functions.GraftFunctions.ngramHashes(
         lower(col(textCol)), n)).as("h"))

@@ -33,7 +33,6 @@ object TextScore {
     * this costs one pass of CPU, zero shuffle. */
   def compressionRatio(df: DataFrame, idCol: String, textCol: String,
       flagLow: Double = 0.3, flagHigh: Double = 0.7): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     df.select(col(idCol),
         octet_length(col(textCol)).as("n_bytes"),
         graft.functions.GraftFunctions.deflateLen(col(textCol))

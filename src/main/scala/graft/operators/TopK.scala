@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, GraftPlanBridge}
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending, SortOrder}
 
-import graft.plans.{PushFilterThroughTopKPerGroup, TopKPerGroupNode, TopKPerGroupStrategy}
+import graft.plans.TopKPerGroupNode
 
 /** Public face of the custom top-k-per-group operator (see
   * [[graft.plans.TopKPerGroupNode]] for the execution strategy and why it
@@ -15,8 +15,6 @@ object TopK {
   def perGroup(df: DataFrame, groupCols: Seq[String], orderCol: String,
       k: Int, desc: Boolean = true, tieBreak: Seq[String] = Nil): DataFrame = {
     val spark = df.sparkSession
-    GraftPlanBridge.addStrategy(spark, TopKPerGroupStrategy)
-    GraftPlanBridge.addOptimization(spark, PushFilterThroughTopKPerGroup)
     val child = GraftPlanBridge.logicalPlan(df)
     val resolve = child.output.map(a => a.name -> a).toMap
     def attr(n: String) = resolve.getOrElse(n,

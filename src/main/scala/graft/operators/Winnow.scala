@@ -50,7 +50,6 @@ object Winnow {
       k: Int = 5, w: Int = 4): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(w >= 1, s"w must be >= 1, got $w")
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val t = col(textCol)
     df.filter(length(t) >= k + w - 1)
       .select(col(idCol),

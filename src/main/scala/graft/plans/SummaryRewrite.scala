@@ -2,7 +2,7 @@ package graft.plans
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftPlanBridge, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -32,9 +32,8 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * integer-valued doubles) — the registrant owns that contract, and
   * FRESHNESS of the summary (the IncrementalAgg refresh loop).
   *
-  * Install: session-build via [[graft.api.GraftExtensions]], or at
-  * runtime through `register` (which idempotently appends the rule to
-  * `spark.experimental.extraOptimizations` — no session rebuild).
+  * The rule rides [[graft.api.GraftExtensions]], so every graft session
+  * carries it; `register` raises on a session that does not.
   */
 object SummaryRewrite {
 
@@ -56,8 +55,7 @@ object SummaryRewrite {
     }
 
   /** Register `summaryDf` (a plain parquet read of the rollup) as the
-    * summary of `base`'s relation, and install the rule into the
-    * session's runtime optimizer if not already present. */
+    * summary of `base`'s relation. */
   def register(spark: SparkSession, base: DataFrame, summaryDf: DataFrame,
       groupCols: Seq[String], cnt: String,
       sums: Map[String, String] = Map.empty,
@@ -73,13 +71,13 @@ object SummaryRewrite {
     val missing = (Seq(cnt) ++ sums.values ++ mins.values ++ maxs.values ++
       groupCols).filterNot(c => rel.output.exists(_.name == c))
     require(missing.isEmpty, s"summary lacks columns: ${missing.mkString(",")}")
+    require(GraftPlanBridge.optimizerRules(spark)
+        .exists(_.isInstanceOf[RewriteAggregateToSummary]),
+      "this session does not carry RewriteAggregateToSummary: build it " +
+        "with graft.api.Engine.session, or attach the engine surface " +
+        "with graft.functions.GraftFunctions.register")
     registry.put(baseKey, SummaryDef(groupCols.toSet, cnt, sums, mins,
       maxs, rel))
-    val installed = spark.experimental.extraOptimizations
-      .exists(_.isInstanceOf[RewriteAggregateToSummary])
-    if (!installed)
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RewriteAggregateToSummary(spark)
   }
 
   /** Drop all registrations (tests). */

@@ -75,7 +75,6 @@ object PipelineQueries {
     * blocked candidates; scoring, closure, and canonicalization are
     * unchanged. */
   val entityResolution: Q = (s, d) => {
-    graft.functions.GraftFunctions.register(s)
     val names = Tables.part(s, d).select("p_name").distinct()
     val withId = names.withColumn("nid",
       conv(substring(md5(col("p_name")), 1, 15), 16, 10).cast("long"))
@@ -175,7 +174,6 @@ object PipelineQueries {
     * blocked candidates, never all-pairs. Rounded 6dp (small-
     * denominator rationals, boundary-free). */
   val jaroWinklerPairs: Q = (s, d) => {
-    graft.functions.GraftFunctions.register(s)
     val names = Tables.part(s, d).select(col("p_name")).distinct()
     val a = names.select(col("p_name").as("name_a"))
     val b = names.select(col("p_name").as("name_b"))
@@ -191,7 +189,6 @@ object PipelineQueries {
     * OSA) over all distinct part-name pairs, same blocking caveat as
     * [[jaroWinklerPairs]]. Integer output — no rounding needed. */
   val damerauPairs: Q = (s, d) => {
-    graft.functions.GraftFunctions.register(s)
     val names = Tables.part(s, d).select(col("p_name")).distinct()
     val a = names.select(col("p_name").as("name_a"))
     val b = names.select(col("p_name").as("name_b"))
@@ -829,7 +826,6 @@ object PipelineQueries {
     * the postings-pruned scan ([[TextSearch.bm25]]), stage 2 never
     * sees more than k vectors. */
   val retrieveRerank: Q = (s, d) => {
-    graft.functions.GraftFunctions.register(s)
     val cands = TextSearch.bm25(Tables.documents(s, d), "doc_id",
       "text", terms = Seq("scan", "join"))
     val emb = Tables.embeddings(s, d)
@@ -855,7 +851,6 @@ object PipelineQueries {
     * index replaces the brute-force cosine — fusion itself only ever
     * sees k·runs rows. */
   val rrfFusion: Q = (s, d) => {
-    graft.functions.GraftFunctions.register(s)
     import graft.operators.Bounded
     val w1 = org.apache.spark.sql.expressions.Window
       .partitionBy(Bounded.constPart(col("bm25")))
@@ -1230,7 +1225,6 @@ object PipelineQueries {
       new String(Files.readAllBytes(marker), "UTF-8").trim == fp &&
       !sys.env.get("GRAFT_INDEX_REBUILD").contains("1")
     if (!fresh) {
-      graft.functions.GraftFunctions.register(s)
       val day1 = docs.filter(col("doc_id") < cut)
       val q1 = qualityGate(day1).cache()
       val keep1 = Dedup.exactByContent(q1, "doc_id", "text")
@@ -1311,7 +1305,6 @@ object PipelineQueries {
   private[graft] def corpusIncrementalParts(s: SparkSession, d: String)
       : (DataFrame, DataFrame) = {
     import graft.operators.IncrementalDedup
-    graft.functions.GraftFunctions.register(s)
     val docs = Tables.documents(s, d)
     val cut = incrementalCut(docs)
     val art = corpusIncrementalArtifacts(s, d, cut)
@@ -1439,7 +1432,6 @@ object PipelineQueries {
       new String(Files.readAllBytes(marker), "UTF-8").trim == fp &&
       !sys.env.get("GRAFT_INDEX_REBUILD").contains("1")
     if (!fresh) {
-      graft.functions.GraftFunctions.register(s)
       val day1 = corpusIncrementalArtifacts(s, d, c1)
       val digests1 = s.read.parquet(day1.resolve("digests").toString)
       val sigs1 = IncrementalDedup.readIndex(s,
@@ -1507,7 +1499,6 @@ object PipelineQueries {
   private[graft] def corpusDay3Parts(s: SparkSession, d: String)
       : (DataFrame, DataFrame) = {
     import graft.operators.IncrementalDedup
-    graft.functions.GraftFunctions.register(s)
     val docs = Tables.documents(s, d)
     val (c1, c2) = day3Cuts(docs)
     val art = corpusDay3Artifacts(s, d, c1, c2)
@@ -1575,7 +1566,6 @@ object PipelineQueries {
       new String(Files.readAllBytes(marker), "UTF-8").trim == fp &&
       !sys.env.get("GRAFT_INDEX_REBUILD").contains("1")
     if (!fresh) {
-      graft.functions.GraftFunctions.register(s)
       val st = corpusStages(docs, Some(DedupQueries.verifiedPairs(s, d)))
       st.quality
         .select(col("doc_id"), col("lang"), col("n_tokens"),
@@ -1644,7 +1634,6 @@ object PipelineQueries {
     * a retraction. */
   private[graft] def corpusRetractFrom(s: SparkSession, d: String,
       retracted: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val (f, benchGrams, pairs) = corpusFramesAtRest(s, d)
     corpusRetractDelta(Tables.documents(s, d), retracted, f.qmeta,
       f.s2ids, f.s3ids, f.s4meta, benchGrams, pairs)
@@ -2158,7 +2147,6 @@ object PipelineQueries {
     * and the amendment change ledger so they cannot disagree. */
   private def corpusAmendStateFrom(s: SparkSession, d: String,
       amendments: DataFrame): (UpsertState, DataFrame) = {
-    graft.functions.GraftFunctions.register(s)
     val art = corpusRetractArtifacts(s, d)
     val f = CorpusFrames.read(s, art.toString)
     // the amendment payload is delta-sized by contract and its
@@ -2279,7 +2267,6 @@ object PipelineQueries {
   private[graft] def corpusRetractLedgerFrom(s: SparkSession, d: String,
       retracted: DataFrame): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val (f, benchGrams, pairs) = corpusFramesAtRest(s, d)
     val st = corpusRetractState(Tables.documents(s, d), retracted,
       f.qmeta, f.s2ids, f.s3ids, f.s4meta, benchGrams, pairs)
@@ -2337,7 +2324,6 @@ object PipelineQueries {
       new String(Files.readAllBytes(marker), "UTF-8").trim == fp &&
       !sys.env.get("GRAFT_INDEX_REBUILD").contains("1")
     if (!fresh) {
-      graft.functions.GraftFunctions.register(s)
       val day12 = corpusDay3Artifacts(s, d, c1, c2)
       val qmeta = s.read.parquet(day12.resolve("qmeta12").toString)
       val s3ids = s.read.parquet(day12.resolve("s3ids12").toString)
@@ -2401,7 +2387,6 @@ object PipelineQueries {
   private[graft] def corpusLifecycleParts(s: SparkSession, d: String)
       : (DataFrame, DataFrame) = {
     import graft.operators.IncrementalDedup
-    graft.functions.GraftFunctions.register(s)
     val docs = Tables.documents(s, d)
     val (c1, c2) = day3Cuts(docs)
     val art = corpusLifecycleArtifacts(s, d, c1, c2)
@@ -3017,7 +3002,6 @@ object PipelineQueries {
     * cell-for-cell — the estimates (including any collision inflation)
     * hash-match exactly. */
   val cmsFreq: Q = (s, d) => {
-    graft.functions.GraftFunctions.register(s)
     import s.implicits._
     val toks = Tables.documents(s, d).select(col("lang"),
       explode(filter(split(lower(col("text")), " "),
@@ -3111,7 +3095,6 @@ object PipelineQueries {
   val annRetrain: Q = (s, d) => {
     import s.implicits._
     import graft.operators.IvfPq
-    graft.functions.GraftFunctions.register(s)
     val emb = Tables.embeddings(s, d).select("vec_id", "embedding")
     val alien = alienBatch(s, d)
     val union = emb.unionByName(alien)
@@ -4376,7 +4359,6 @@ object PipelineQueries {
     * groupable aggregate — same integer recipe as q_hll_estimate, so
     * the DuckDB oracle predicts the AGGREGATE's output per group. */
   val hllByGroup: Q = (s, d) => {
-    graft.functions.GraftFunctions.register(s)
     Tables.events(s, d)
       .groupBy("event_type")
       .agg(graft.functions.GraftFunctions

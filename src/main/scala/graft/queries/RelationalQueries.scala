@@ -105,7 +105,6 @@ object RelationalQueries {
     * hash-based estimate; rows-only (no SQL oracle can reproduce the
     * sketch), tolerance-tested in KmvSketchSpec. */
   val kmvDistinct: Q = (s, d) => {
-    graft.functions.GraftFunctions.register(s)
     Tables.lineitem(s, d)
       .groupBy("l_returnflag")
       .agg(graft.functions.GraftFunctions
@@ -151,7 +150,6 @@ object RelationalQueries {
     * state, bitwise-OR partial merge, popcount at the end. Full hash
     * gate against the plain COUNT(DISTINCT) oracle. */
   val bitmapDistinct: Q = (s, d) => {
-    graft.functions.GraftFunctions.register(s)
     Tables.orders(s, d)
       .groupBy(col("o_orderpriority"))
       .agg(graft.functions.GraftFunctions.bitmapCount(
@@ -166,7 +164,6 @@ object RelationalQueries {
     * documented tiny-side allowlist). The oracle pays the id-level
     * self-join the bitmap exists to avoid. */
   val bitmapOverlap: Q = (s, d) => {
-    graft.functions.GraftFunctions.register(s)
     val seg = Tables.events(s, d)
       .groupBy(col("event_type"))
       .agg(graft.functions.GraftFunctions.bitmapAgg(col("user_id"),
@@ -187,7 +184,6 @@ object RelationalQueries {
     * count(DISTINCT) is a true oracle for the sketch's merge/eval path,
     * not a tolerance check. */
   val kmvExact: Q = (s, d) => {
-    graft.functions.GraftFunctions.register(s)
     // exact-regime assert: the gate's claim is per-group distinct < k
     // (sub-k sketches ARE the exact count). A future SF whose
     // cardinality crosses k must fail LOUDLY here, not drift into the
@@ -216,7 +212,6 @@ object RelationalQueries {
     * algebra). The 5-row sketch-pair join is a deliberate tiny
     * broadcast nested loop. */
   val kmvSetops: Q = (s, d) => {
-    graft.functions.GraftFunctions.register(s)
     import graft.functions.GraftFunctions
     import graft.operators.KmvAlgebra
     // k = 2048 keeps every per-type sketch pigeonhole-exact through
@@ -254,7 +249,6 @@ object RelationalQueries {
     * lower bounds at ranks ⌈qN⌉ — hash-match exactly, collisions and
     * all (the CMS/Bloom gating recipe applied to quantiles). */
   val histQuantiles: Q = (s, d) => {
-    graft.functions.GraftFunctions.register(s)
     Tables.lineitem(s, d)
       .select(col("l_returnflag"),
         expr("cast(round(l_extendedprice * 100) as bigint)").as("cents"))
@@ -1341,7 +1335,6 @@ object RelationalQueries {
     * The eviction regime is covered by MisraGriesSpec's guarantee
     * properties (approx-family discipline). */
   val heavyHitters: Q = (s, d) => {
-    graft.functions.GraftFunctions.register(s)
     Tables.events(s, d)
       .agg(graft.functions.GraftFunctions.misraGries(
         col("event_type"), 16).as("hh"))
@@ -1492,7 +1485,6 @@ object RelationalQueries {
     * cell-for-cell (the q_cms_freq recipe), so the ESTIMATE itself —
     * collision inflation included — hash-matches. */
   val joinCardEst: Q = (s, d) => {
-    graft.functions.GraftFunctions.register(s)
     import graft.functions.GraftFunctions
     val w = 1024
     val dep = 4
@@ -1515,7 +1507,6 @@ object RelationalQueries {
     * filter is result-invisible (FPs die in the join), so the oracle is
     * the PLAIN join; sums decimal-exact. */
   val bloomJoin: Q = (s, d) => {
-    graft.functions.GraftFunctions.register(s)
     val dim = Tables.customer(s, d)
       .filter(col("c_nationkey") === 1)
       .select(col("c_custkey").as("o_custkey"), col("c_mktsegment"))

@@ -20,7 +20,6 @@ object RiffQueries {
   /** Build a riff envelope per document, encode to the wire format, decode
     * back, and project the fields (R2/R6 parity). */
   val riffRoundtrip: Q = (s, d) => {
-    GraftFunctions.register(s)
     Tables.documents(s, d)
       .select(col("doc_id"),
         map(
@@ -39,7 +38,6 @@ object RiffQueries {
   /** Map functions over the decoded envelope (E28): map_keys /
     * map_values / element_at / map_contains_key. */
   val mapFuncs: Q = (s, d) => {
-    GraftFunctions.register(s)
     Tables.documents(s, d)
       .select(col("doc_id"),
         GraftFunctions.riffDecode(GraftFunctions.riffEncode(

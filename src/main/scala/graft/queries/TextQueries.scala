@@ -156,7 +156,6 @@ object TextQueries {
   /** The Aho–Corasick blocklist screen over the realistic corpus —
     * terms inside real sentences (mixed case, punctuation-adjacent). */
   val blocklistRich: Q = (s, d) => {
-    graft.functions.GraftFunctions.register(s)
     richDocs(s, d).select(col("doc_id"),
         graft.functions.GraftFunctions.blockTermHits(
           lower(coalesce(col("text"), lit(""))),
@@ -465,7 +464,6 @@ object TextQueries {
     * nfc_normalize/strip_accents. The char-count delta (raw vs NFC) proves
     * real composition happened — 4 combining marks fold per doc. */
   val utf8Normalize: Q = (s, d) => {
-    graft.functions.GraftFunctions.register(s)
     import graft.functions.GraftFunctions.{utf8Normalize => norm, stripAccents}
     // combining marks (U+0301 U+0308 U+030A), NOT precomposed chars
     val pre = "Café naïve Ångström "
@@ -485,7 +483,6 @@ object TextQueries {
     * regardless of dictionary size, where a regex alternation pays
     * O(terms) per char. Map-only, stays in whole-stage codegen. */
   val blocklistHits: Q = (s, d) => {
-    graft.functions.GraftFunctions.register(s)
     val terms = graft.functions.GraftFunctions.BlockTerms
     Tables.documents(s, d).select(col("doc_id"),
         graft.functions.GraftFunctions.blockTermHits(

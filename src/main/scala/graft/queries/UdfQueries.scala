@@ -28,16 +28,11 @@ object UdfQueries {
     if (prio.startsWith("1")) base + 1 else base
   })
 
-  // once-per-session SQL registration (the GraftFunctions.register
-  // guard): re-registering per query construction floods the bench
-  // tail with "replaced a previously registered function" WARNs
-  private val registered =
-    java.util.Collections.newSetFromMap(
-      new java.util.concurrent.ConcurrentHashMap[SparkSession,
-        java.lang.Boolean]())
-
+  // once-per-session SQL registration, asked of the session itself:
+  // re-registering per query construction floods the bench tail with
+  // "replaced a previously registered function" WARNs
   private def registerOnce(s: SparkSession): Unit =
-    if (registered.add(s)) {
+    if (!s.catalog.functionExists("order_band")) {
       s.udf.register("order_band", band)
       s.udf.register("geo_mean", udaf(new GeoMean, Encoders.scalaDouble))
     }

@@ -36,7 +36,6 @@ object VectorQueries {
   }
 
   private def probesAndCorpus(s: SparkSession, d: String) = {
-    GraftFunctions.register(s)
     val emb = Tables.embeddings(s, d)
     val probe = emb.filter(col("vec_id") < 5)
       .select(col("vec_id").as("probe_id"), col("embedding").as("pvec"))
@@ -119,7 +118,6 @@ object VectorQueries {
 
   /** Norm statistics per label (E36/E27): native norm kernel + group agg. */
   val embedNorms: Q = (s, d) => {
-    GraftFunctions.register(s)
     Tables.embeddings(s, d)
       .select(col("label"), GraftFunctions.vecNorm(col("embedding")).as("norm"))
       .groupBy("label")

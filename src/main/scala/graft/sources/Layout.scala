@@ -215,7 +215,6 @@ object Layout {
     * optional bloom filters per column chunk). */
   def bloomIndexedEventsDir(s: SparkSession, d: String,
       files: Int = 16): String = {
-    graft.functions.GraftFunctions.register(s)
     val dir = Paths.get(Artifacts.cacheDir,
       "events_bloomidx_" + keyOf(new java.io.File(d).getCanonicalPath,
         files.toString, bloomBits.toString, bloomK.toString))

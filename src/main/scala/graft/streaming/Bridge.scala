@@ -37,7 +37,6 @@ object Bridge {
       tap: Option[org.apache.spark.sql.Observation] = None,
       tapName: Option[String] = None): DataFrame = {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val tapExprs = Seq(count(lit(1)).as("n_records"),
       sum(octet_length(col("value"))).as("n_bytes"))
     // batch taps use an Observation handle; streaming taps must be named

@@ -185,7 +185,6 @@ object StreamOps {
     * bucket recipe keeps the batch oracle exact (cell-for-cell DuckDB
     * twin, as in the batch gate). */
   def quantilePlan(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     replayEvents(spark, dir)
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
@@ -209,7 +208,6 @@ object StreamOps {
     * exact order-independent regime and the gate is a plain per-window
     * count oracle. */
   def heavyHittersPlan(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     replayEvents(spark, dir)
       .withWatermark("ts", "1 day")
       .groupBy(window(col("ts"), "1 day"))
@@ -243,7 +241,6 @@ object StreamOps {
     * regime there; sub-k estimates are exact for ANY k, so sf0.01
     * hashes are unchanged). */
   def streamDistinctPlan(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     replayEvents(spark, dir)
       .withWatermark("ts", "1 day")
       .groupBy(window(col("ts"), "1 day"))
@@ -628,7 +625,6 @@ object StreamOps {
     * kernel serves both tiers, so batch and stream can never disagree
     * on a term. */
   def streamBlocklistPlan(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val terms = graft.functions.GraftFunctions.BlockTerms
     replayDocuments(spark, dir).select(col("doc_id"),
         graft.functions.GraftFunctions.blockTermHits(
@@ -756,7 +752,6 @@ object StreamOps {
     * against the exact-Jaccard from-scratch oracle at 3 SFs. */
   def streamNearDupScreen(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.IncrementalDedup
-    graft.functions.GraftFunctions.register(spark)
     val (sigs1, cut) =
       graft.queries.PipelineQueries.corpusIncrementalIndex(spark, dir)
     sigs1.cache()
@@ -1038,7 +1033,6 @@ object StreamOps {
       : CrudStreamResult = {
     import graft.queries.{PipelineQueries => PQ}
     import graft.operators.IncrementalDedup
-    graft.functions.GraftFunctions.register(spark)
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     var docs = graft.sources.Tables.documents(spark, dir)
@@ -1321,7 +1315,6 @@ object StreamOps {
     import graft.queries.{PipelineQueries => PQ}
     import graft.operators.IvfPq
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(spark)
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val docs = graft.sources.Tables.documents(spark, dir)
@@ -1448,7 +1441,6 @@ object StreamOps {
   def streamRetractFull(spark: SparkSession, dir: String): DataFrame = {
     import graft.queries.{PipelineQueries => PQ}
     import graft.operators.IvfPq
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val docs = graft.sources.Tables.documents(spark, dir)
     val n = docs.agg(max(col("doc_id"))).head.getLong(0)

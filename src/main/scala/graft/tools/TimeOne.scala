@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc single-query timer: `runMain graft.tools.TimeOne <name> [sfDir]
   * [reps]` — same session posture as Bench, prints per-rep seconds so plan
   * changes can be measured without a full bench sweep. */
@@ -10,15 +8,8 @@ object TimeOne {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 3
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.api.Engine.session("local[32]", 32)
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
     val fn = graft.SparkEntry.queries(name)
     for (i <- 1 to reps) {
       val t0 = System.nanoTime()

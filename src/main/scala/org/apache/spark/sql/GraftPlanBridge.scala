@@ -1,6 +1,7 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 
 /** Bridge into `private[sql]` plan constructors, so graft's custom logical
   * operators (graft.plans.*) can surface as ordinary DataFrames. Lives in
@@ -13,34 +14,31 @@ object GraftPlanBridge {
   def logicalPlan(df: DataFrame): LogicalPlan =
     df.asInstanceOf[classic.Dataset[Row]].logicalPlan
 
-  def addStrategy(spark: SparkSession,
-      s: org.apache.spark.sql.execution.SparkStrategy): Unit = {
-    val cs = spark.asInstanceOf[classic.SparkSession]
-    if (!cs.experimental.extraStrategies.contains(s)) {
-      cs.experimental.extraStrategies =
-        cs.experimental.extraStrategies :+ s
-    }
-  }
-
-  def addOptimization(spark: SparkSession,
-      r: org.apache.spark.sql.catalyst.rules.Rule[
-        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]): Unit = {
-    val cs = spark.asInstanceOf[classic.SparkSession]
-    if (!cs.experimental.extraOptimizations.contains(r)) {
-      cs.experimental.extraOptimizations =
-        cs.experimental.extraOptimizations :+ r
-    }
-  }
-
   /** Materialize what a SparkSessionExtensions module would inject —
     * `build*` accessors are `private[sql]`, this exposes them to tests. */
   def buildExtensionParts(f: SparkSessionExtensions => Unit,
       spark: SparkSession): (Seq[org.apache.spark.sql.execution.SparkStrategy],
-        Seq[org.apache.spark.sql.catalyst.rules.Rule[
-          org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]]) = {
+        Seq[Rule[LogicalPlan]]) = {
     val exts = new SparkSessionExtensions
     f(exts)
     val cs = spark.asInstanceOf[classic.SparkSession]
     (exts.buildPlannerStrategies(cs), exts.buildOptimizerRules(cs))
   }
+
+  /** Late attach: append the strategies and rules `f` would inject at
+    * session build to the session's runtime `experimental` hooks. */
+  def attach(f: SparkSessionExtensions => Unit, spark: SparkSession): Unit = {
+    val (strategies, rules) = buildExtensionParts(f, spark)
+    val cs = spark.asInstanceOf[classic.SparkSession]
+    cs.experimental.extraStrategies = cs.experimental.extraStrategies ++
+      strategies.filterNot(cs.experimental.extraStrategies.contains)
+    cs.experimental.extraOptimizations = cs.experimental.extraOptimizations ++
+      rules.filterNot(cs.experimental.extraOptimizations.contains)
+  }
+
+  /** Every logical rule the session's optimizer runs, injected and
+    * experimental ones included. */
+  def optimizerRules(spark: SparkSession): Seq[Rule[LogicalPlan]] =
+    spark.asInstanceOf[classic.SparkSession].sessionState.optimizer
+      .batches.flatMap(_.rules)
 }

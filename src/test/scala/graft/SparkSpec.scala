@@ -3,20 +3,15 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session for specs — one JVM-wide session, UTC, small shuffle. */
+/** Shared session for specs — one JVM-wide `Engine` session, small
+  * shuffle. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
+    val s = graft.api.Engine.builder("local[4]", 4)
       .config("spark.sql.warehouse.dir",
         sys.props("java.io.tmpdir") + "/graft-test-warehouse")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(s)
     s
   }
 }

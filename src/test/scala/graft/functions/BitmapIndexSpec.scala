@@ -11,7 +11,7 @@ class BitmapIndexSpec extends SparkSpec {
 
   import spark.implicits._
 
-  private def registered = { GraftFunctions.register(spark); spark }
+  private def registered = spark
 
   test("bitmap_count(bitmap_agg) == COUNT(DISTINCT), nulls ignored") {
     registered

@@ -11,7 +11,6 @@ class CompressSpec extends SparkSpec {
   import spark.implicits._
 
   private def ratio(s: String): Double = {
-    GraftFunctions.register(spark)
     Seq(s).toDF("t")
       .select(GraftFunctions.deflateLen(col("t")).cast("double") /
         octet_length(col("t")))
@@ -35,7 +34,6 @@ class CompressSpec extends SparkSpec {
   }
 
   test("operator flags both tails, passes prose; null-safe; SQL works") {
-    GraftFunctions.register(spark)
     val docs = Seq(
       (1L, "word " * 200),
       (2L, "A perfectly ordinary sentence about rivers, bridges, and " +

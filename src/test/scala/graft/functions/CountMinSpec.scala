@@ -8,7 +8,6 @@ class CountMinSpec extends SparkSpec {
   import spark.implicits._
 
   private def freqs(words: Seq[String], width: Int, depth: Int) = {
-    GraftFunctions.register(spark)
     val sk = words.toDF("w")
       .agg(GraftFunctions.cmsSketch(col("w"), width, depth).as("sk"))
     val probes = words.distinct.toDF("word")
@@ -44,7 +43,6 @@ class CountMinSpec extends SparkSpec {
   }
 
   test("partial merge is order-independent (repartitioned input)") {
-    GraftFunctions.register(spark)
     val words = (1 to 500).map(i => s"w${i % 37}")
     val one = words.toDF("w").coalesce(1)
       .agg(GraftFunctions.cmsSketch(col("w"), 256, 4)).as[Seq[Long]].head()
@@ -54,7 +52,6 @@ class CountMinSpec extends SparkSpec {
   }
 
   test("SQL surface: cms_sketch + cms_query compose in plain SQL") {
-    GraftFunctions.register(spark)
     val est = spark.sql(
       """SELECT cms_query(sk, 'x', 128, 4) FROM (
         |  SELECT cms_sketch(w, 128, 4) AS sk
@@ -65,7 +62,6 @@ class CountMinSpec extends SparkSpec {
 
   test("inner product: one-sided join-size estimate, exact in the " +
       "collision-free regime") {
-    GraftFunctions.register(spark)
     // |A ⋈ B| = Σ_k fA(k)·fB(k): a={x×3, y×2, z}, b={x×2, y, w}
     // → 3·2 + 2·1 = 8
     val a = Seq("x", "x", "x", "y", "y", "z").toDF("k")

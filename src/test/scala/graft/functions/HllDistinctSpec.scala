@@ -33,7 +33,6 @@ class HllDistinctSpec extends SparkSpec {
   }
 
   test("SQL registration and per-group use; nulls ignored") {
-    GraftFunctions.register(spark)
     Seq(("a", Some(1L)), ("a", Some(2L)), ("a", None), ("b", Some(1L)))
       .toDF("g", "k").createOrReplaceTempView("hll_in")
     val got = spark.sql(

@@ -35,7 +35,6 @@ class LogHistSpec extends SparkSpec {
   }
 
   test("small-value quantiles are exact; large within 2^-6 relative") {
-    GraftFunctions.register(spark)
     val small = (1L to 50L).toDF("v")
     val got = small.agg(GraftFunctions.histQuantiles(col("v"), 6,
         Seq(0.5, 1.0)).as("q"))
@@ -55,7 +54,6 @@ class LogHistSpec extends SparkSpec {
   }
 
   test("partition layout never changes the result (mergeable)") {
-    GraftFunctions.register(spark)
     val data = (1L to 5000L).map(i => (i % 7, i * i % 1000000L))
     def run(parts: Int) =
       data.toDF("g", "v").repartition(parts)
@@ -67,7 +65,6 @@ class LogHistSpec extends SparkSpec {
   }
 
   test("SQL surface and null skipping") {
-    GraftFunctions.register(spark)
     Seq(Some(10L), None, Some(20L), Some(30L), None)
       .toDF("v").createOrReplaceTempView("lh_t")
     val got = spark.sql(
@@ -77,7 +74,6 @@ class LogHistSpec extends SparkSpec {
   }
 
   test("integral widths narrower than long are accepted") {
-    GraftFunctions.register(spark)
     val got = Seq(10, 20, 30).toDF("v")
       .agg(GraftFunctions.histQuantiles(col("v"), 6, Seq(1.0)))
       .head().getSeq[Long](0)
@@ -85,7 +81,6 @@ class LogHistSpec extends SparkSpec {
   }
 
   test("negative input fails loudly") {
-    GraftFunctions.register(spark)
     val e = intercept[Exception] {
       Seq(-1L).toDF("v")
         .agg(GraftFunctions.histQuantiles(col("v"), 6, Seq(0.5)))

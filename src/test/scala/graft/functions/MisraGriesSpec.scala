@@ -13,7 +13,6 @@ class MisraGriesSpec extends SparkSpec {
 
   private def summary(df: org.apache.spark.sql.DataFrame, k: Int,
       parts: Int): Map[String, Long] = {
-    GraftFunctions.register(spark)
     df.repartition(parts)
       .agg(GraftFunctions.misraGries(col("v"), k).as("hh"))
       .select(explode(col("hh")))
@@ -50,7 +49,6 @@ class MisraGriesSpec extends SparkSpec {
   }
 
   test("SQL surface: misra_gries callable from SQL, ordered output") {
-    GraftFunctions.register(spark)
     Seq("x", "x", "y").toDF("v").createOrReplaceTempView("mg_in")
     val rows = spark.sql(
       "SELECT misra_gries(v, 4) AS hh FROM mg_in")
@@ -60,7 +58,6 @@ class MisraGriesSpec extends SparkSpec {
   }
 
   test("nulls are ignored; empty input yields empty summary") {
-    GraftFunctions.register(spark)
     val df = Seq(Some("a"), None, Some("a")).toDF("v")
     assert(summary(df.filter(col("v").isNotNull || col("v").isNull), 4, 2)
       == Map("a" -> 2L))

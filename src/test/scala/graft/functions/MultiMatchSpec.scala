@@ -36,7 +36,6 @@ class MultiMatchSpec extends SparkSpec {
 
   test("blockTermHits column: codegen path, dictionary order, null in " +
       "-> null out") {
-    GraftFunctions.register(spark)
     val df = Seq((1L, Some("ababa")), (2L, Some("no hits here at all")),
       (3L, None), (4L, Some("abcabd plus xyz"))).toDF("id", "text")
     val got = df.select(col("id"),

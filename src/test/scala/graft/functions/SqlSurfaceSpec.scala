@@ -9,7 +9,6 @@ import graft.SparkSpec
 class SqlSurfaceSpec extends SparkSpec {
 
   private def one[T](sql: String): T = {
-    GraftFunctions.register(spark)
     spark.sql(sql).head().get(0).asInstanceOf[T]
   }
 
@@ -70,7 +69,6 @@ class SqlSurfaceSpec extends SparkSpec {
   }
 
   test("generator produces one row per n-gram hash") {
-    GraftFunctions.register(spark)
     assert(spark.sql(
       "SELECT ngram_hashes_gen('a b c d', 2)").count() === 3)
   }
@@ -92,7 +90,6 @@ class SqlSurfaceSpec extends SparkSpec {
 
   test("vec_quant8/vec_dequant8 match the VectorQuant operator") {
     import org.apache.spark.sql.functions._
-    GraftFunctions.register(spark)
     val df = spark.range(8).select(col("id"),
       array((0 to 5).map(i => (rand(seed = i) * 2 - 1).cast("double")): _*)
         .as("v"))
@@ -112,7 +109,6 @@ class SqlSurfaceSpec extends SparkSpec {
 
   test("segment_tokens matches LineDedup.segmentByTokens") {
     import org.apache.spark.sql.functions._
-    GraftFunctions.register(spark)
     val df = spark.createDataFrame(Seq(
       (1L, "The quick Brown fox jumps over the lazy dog"),
       (2L, "one  two   three"), // runs of spaces
@@ -127,7 +123,6 @@ class SqlSurfaceSpec extends SparkSpec {
 
   test("chunk_windows generator matches Chunking.slidingWindows") {
     import org.apache.spark.sql.functions._
-    GraftFunctions.register(spark)
     val df = spark.createDataFrame(Seq(
       (1L, "a b c d e f g"), (2L, "x y"), (3L, ""))).toDF("id", "text")
     val op = graft.operators.Chunking
@@ -143,7 +138,6 @@ class SqlSurfaceSpec extends SparkSpec {
 
   test("sentence_split + greedy_chunks reproduce Chunking.sentences") {
     import org.apache.spark.sql.functions._
-    GraftFunctions.register(spark)
     val df = spark.createDataFrame(Seq(
       (1L, "a b c. d e! f g? h"),
       (2L, "a. b c d e f. g"),
@@ -179,7 +173,6 @@ class SqlSurfaceSpec extends SparkSpec {
 
   test("cluster_assign reproduces Clustering.assign's argmax contract") {
     import org.apache.spark.sql.functions._
-    GraftFunctions.register(spark)
     // two orthogonal centroids; a vector on each axis plus a tie case
     val assigned = spark.sql(
       """SELECT v, cluster_assign(v, array(

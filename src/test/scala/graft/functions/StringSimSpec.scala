@@ -48,7 +48,6 @@ class StringSimSpec extends SparkSpec {
 
   test("symmetric, and the SQL surface + codegen path agree with " +
       "direct eval") {
-    GraftFunctions.register(spark)
     val df = duckdbReference.map { case (a, b, _) => (a, b) }
       .toDF("a", "b")
     val viaSql = df.selectExpr("a", "b", "jaro_winkler(a, b) AS jw")
@@ -65,7 +64,6 @@ class StringSimSpec extends SparkSpec {
   }
 
   test("null propagates") {
-    GraftFunctions.register(spark)
     val r = Seq(("x", Option.empty[String])).toDF("a", "b")
       .selectExpr("jaro_winkler(a, b)").collect().head
     assert(r.isNullAt(0))
@@ -82,7 +80,6 @@ class StringSimSpec extends SparkSpec {
     ("thee", "the", 1L), ("water", "wtaer", 1L))
 
   test("damerau_levenshtein matches the probed DuckDB outputs") {
-    GraftFunctions.register(spark)
     duckdbDlReference.foreach { case (a, b, want) =>
       val got = DamerauLevenshtein.distance(
         UTF8String.fromString(a), UTF8String.fromString(b))

@@ -10,7 +10,6 @@ class TextNormSpec extends SparkSpec {
   import spark.implicits._
 
   private def one(form: String, s: String): String = {
-    GraftFunctions.register(spark)
     Seq(s).toDF("t")
       .select(GraftFunctions.utf8Normalize(col("t"), form))
       .collect()(0).getString(0)
@@ -35,7 +34,6 @@ class TextNormSpec extends SparkSpec {
   }
 
   test("strip_accents folds composed AND decomposed marks") {
-    GraftFunctions.register(spark)
     val out = Seq("Café naïve Ångström")
       .toDF("t").select(GraftFunctions.stripAccents(col("t")))
       .collect()(0).getString(0)
@@ -43,7 +41,6 @@ class TextNormSpec extends SparkSpec {
   }
 
   test("normalization converges byte-distinct twins for exact dedup") {
-    GraftFunctions.register(spark)
     val twins = Seq((1L, "Café terrace"), (2L, "Café terrace"))
       .toDF("doc_id", "text")
     val rawKeys = twins.select(md5(col("text").cast("binary")))
@@ -56,7 +53,6 @@ class TextNormSpec extends SparkSpec {
   }
 
   test("nulls pass through; unknown form fails loudly; SQL surface works") {
-    GraftFunctions.register(spark)
     val r = Seq[(java.lang.Long, String)]((1L, null)).toDF("id", "t")
       .select(GraftFunctions.utf8Normalize(col("t"))).collect()(0)
     assert(r.isNullAt(0))

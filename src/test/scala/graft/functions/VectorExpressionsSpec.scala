@@ -17,7 +17,6 @@ class VectorExpressionsSpec extends SparkSpec {
   }
 
   test("cosine/dot/l2 match reference fold over real embeddings") {
-    GraftFunctions.register(spark)
     val rows = graft.sources.Tables.embeddings(spark, sf)
       .limit(50)
       .select(col("embedding"),
@@ -35,7 +34,6 @@ class VectorExpressionsSpec extends SparkSpec {
   }
 
   test("cross-pair cosine matches reference on sampled pairs") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val emb = graft.sources.Tables.embeddings(spark, sf)
       .limit(10).select("vec_id", "embedding").collect()
@@ -54,7 +52,6 @@ class VectorExpressionsSpec extends SparkSpec {
   }
 
   test("native kernel is bit-identical to the declarative HOF fold") {
-    GraftFunctions.register(spark)
     val emb = graft.sources.Tables.embeddings(spark, sf).limit(100)
     val a = emb.select(col("vec_id").as("ia"), col("embedding").as("va"))
     val b = emb.select(col("vec_id").as("ib"), col("embedding").as("vb"))
@@ -68,7 +65,6 @@ class VectorExpressionsSpec extends SparkSpec {
   }
 
   test("SQL surface: cosine_sim callable from spark.sql") {
-    GraftFunctions.register(spark)
     val r = spark.sql(
       "SELECT cosine_sim(array(1.0D, 0.0D), array(0.0D, 1.0D)) AS c," +
         " vec_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d," +
@@ -79,7 +75,6 @@ class VectorExpressionsSpec extends SparkSpec {
   }
 
   test("null inputs propagate null") {
-    GraftFunctions.register(spark)
     val r = spark.sql(
       "SELECT cosine_sim(CAST(NULL AS ARRAY<DOUBLE>), array(1.0D)) AS c")
       .head()

@@ -30,7 +30,6 @@ class DecontamSpec extends SparkSpec {
     val tricky = Seq("a b c d e f", "x  y z q r", " lead pad c d e",
       "trail a b c d ", "", "one", "exactly five token doc here")
       .toDF("t")
-    graft.functions.GraftFunctions.register(spark)
     val viaKernel = tricky.select(explode(
         graft.functions.GraftFunctions.ngramHashes(lower(col("t")), 5))
         .as("h")).collect().map(_.getLong(0)).distinct.sorted
@@ -42,7 +41,6 @@ class DecontamSpec extends SparkSpec {
 
   test("generator (UDTF) form streams the same hashes as the array form") {
     import org.apache.spark.sql.functions._
-    graft.functions.GraftFunctions.register(spark)
     def collectHashes(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     val viaGen = collectHashes(docs.select(col("doc_id"),
@@ -106,7 +104,6 @@ class DecontamSpec extends SparkSpec {
     import spark.implicits._
     val items = (0 until 500).map(i => s"item $i").toDF("ng")
     def build(df: org.apache.spark.sql.DataFrame) = {
-      graft.functions.GraftFunctions.register(spark)
       df.agg(graft.functions.GraftFunctions.bloomAgg(col("ng"), 4096, 3))
         .collect()(0).getSeq[Long](0)
     }
@@ -116,7 +113,6 @@ class DecontamSpec extends SparkSpec {
 
   test("bloom_agg/bloom_contains compose from plain SQL") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     Seq("alpha", "beta", "gamma").toDF("w").createOrReplaceTempView("bf_in")
     val hits = spark.sql("""
       WITH f AS (SELECT bloom_agg(w, 4096, 3) AS bf FROM bf_in)

@@ -65,7 +65,6 @@ class RepetitionSpec extends SparkSpec {
   }
 
   test("purge_positions kernel: linear merge, garbage-tolerant") {
-    graft.functions.GraftFunctions.register(spark)
     def purge(toks: Seq[String], pos: Seq[Int]): Seq[String] =
       Seq((toks, pos)).toDF("t", "p")
         .select(graft.functions.GraftFunctions.purgePositions(
