@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions
+import graft.sources.Artifacts
 
 /** IVF-PQ: the composed billion-scale ANN index (SURVEY §2B E38
   * capstone) — IVF coarse lists bound the search to `nprobe` partitions
@@ -74,21 +75,15 @@ object IvfPq {
 
   /** Build-once/search-many: load the index from `cacheDir` if an
     * artifact for this (tag, params, corpus) exists, else build it and
-    * persist centroids/books/codes as parquet. The marker file is the
-    * commit point (written last, holds the corpus fingerprint): a
-    * crashed build leaves no marker and is rebuilt; a corpus whose row
-    * count or id set changed invalidates the artifact. `tag` is the
-    * caller's identity for the corpus (canonical input path) — it and
-    * every shape parameter are in the cache key, so different corpora or
-    * params never collide.
-    *
-    * Fingerprint contract: count + a hash-sum of the id column (one
-    * single-column agg — the vector column is never read for the check).
-    * A corpus whose VECTORS changed while ids and count stayed identical
-    * is NOT detected — that is the deliberate cost/coverage trade
-    * (probing content would scan the embeddings on every call, the exact
-    * cost this cache removes). Set env `GRAFT_INDEX_REBUILD=1` to force
-    * a rebuild after an in-place corpus rewrite.
+    * persist centroids/books/codes as parquet, under the
+    * [[graft.sources.Artifacts.cached]] protocol. `tag` is the caller's
+    * identity for the corpus (canonical input path) — it and every
+    * shape parameter are in the cache key, so different corpora or
+    * params never collide. The fingerprint covers the id column only:
+    * the vector column is never read for the check (probing content
+    * would scan the embeddings on every call, the exact cost this cache
+    * removes), so changed vectors under unchanged ids need a forced
+    * rebuild.
     *
     * This is the production posture the per-call [[build]] only
     * approximates: at 100 TB the index IS a persisted artifact, built
@@ -98,27 +93,11 @@ object IvfPq {
       idCol: String = "vec_id", vecCol: String = "embedding",
       lists: Int = 20, kmeansIters: Int = 2, m: Int = 8,
       k: Int = 16, pqIters: Int = 2, dim: Int = 64): Index = {
-    import java.nio.file.{Files, Paths}
     val spark = corpus.sparkSession
-    val keySrc = Seq(tag, idCol, vecCol, s"lists=$lists", kmeansIters, m, k,
-      pqIters, dim).mkString("|")
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(keySrc.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val dir = Paths.get(cacheDir, key)
-    val marker = dir.resolve("_built")
-    // bit_xor, not sum: order-independent like sum but cannot overflow
-    // under ANSI arithmetic
-    val fpRow = corpus.agg(count(lit(1)), bit_xor(xxhash64(col(idCol)))).head()
-    val fp = s"${fpRow.getLong(0)}:${if (fpRow.isNullAt(1)) 0L
-      else fpRow.getLong(1)}"
-    def load() = Index(
-      spark.read.parquet(dir.resolve("centroids").toString),
-      spark.read.parquet(dir.resolve("books").toString),
-      spark.read.parquet(dir.resolve("codes").toString), idCol)
-    val fresh = Files.exists(marker) &&
-      new String(Files.readAllBytes(marker), "UTF-8").trim == fp &&
-      !sys.env.get("GRAFT_INDEX_REBUILD").contains("1")
-    if (!fresh) {
+    val dir = Artifacts.cached(cacheDir,
+      Artifacts.key(tag, idCol, vecCol, s"lists=$lists", kmeansIters.toString,
+        m.toString, k.toString, pqIters.toString, dim.toString),
+      Artifacts.idFingerprint(corpus, idCol)) { dir =>
       // spread the build across cores even when the corpus arrives as
       // one input file — build-time cost only, the artifact re-reads
       // multi-file
@@ -131,11 +110,13 @@ object IvfPq {
       idx.codes.write.mode("overwrite")
         .parquet(dir.resolve("codes").toString)
       idx.centroids.unpersist(); idx.books.unpersist(); idx.codes.unpersist()
-      Files.write(marker, fp.getBytes("UTF-8")) // commit point
     }
     // always serve from the artifact, so the searched plan is identical
     // on build-miss and cache-hit runs
-    load()
+    Index(
+      spark.read.parquet(dir.resolve("centroids").toString),
+      spark.read.parquet(dir.resolve("books").toString),
+      spark.read.parquet(dir.resolve("codes").toString), idCol)
   }
 
   /** Append a batch of new vectors WITHOUT retraining — the index

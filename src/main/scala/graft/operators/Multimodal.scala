@@ -155,7 +155,6 @@ object Multimodal {
 
   /** Metadata + feature projection used by the oracle query. */
   def decodedMeta(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     decodeAll(documentsAsMedia(spark, dir))
       .select(col("media_id"), col("modality"), col("n_bytes"),
         col("width"), col("height"), col("n_frames"),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{AnnSearch, Dedup, Multimodal}
-import graft.sources.Tables
+import graft.sources.{Artifacts, Tables}
 
 /** Driver-facing queries for the near-dup / ANN / multimodal operator
   * suite (SURVEY §2B E35, E38, E40).
@@ -429,41 +429,24 @@ object DedupQueries {
     * policies). */
   private[graft] def verifiedPairs(s: SparkSession, d: String,
       minJaccard: Double = 0.6): DataFrame =
-    cachedPairs(s, d, s"setsim-pairs|trigram|j=$minJaccard",
-      () => graft.operators.SetSimJoin.joinByJaccard(
+    cachedPairs(s, d, canonical(d), s"setsim-pairs|trigram|j=$minJaccard")(
+      graft.operators.SetSimJoin.joinByJaccard(
         shingledDocs(s, d), "doc_id", "shingles", minJaccard))
+
+  private def canonical(d: String): String =
+    new java.io.File(d).getCanonicalPath
 
   /** Generalized build-once/read-many pair-graph artifact (the
     * [[verifiedPairs]] discipline, shared since r14 with the
-    * rich-corpus gate): keyed by corpus path + caller tag,
-    * fingerprinted by doc count + id hash-sum; always served from the
-    * parquet artifact so the gate plan is identical on build-miss and
-    * cache-hit runs. */
+    * rich-corpus, linkage and containment gates): an
+    * [[Artifacts.cached]] directory keyed by `keyParts`, fingerprinted
+    * by the corpus doc ids; always served from the parquet artifact so
+    * the gate plan is identical on build-miss and cache-hit runs. */
   private[graft] def cachedPairs(s: SparkSession, d: String,
-      tagSuffix: String, build: () => DataFrame): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val tag = new java.io.File(d).getCanonicalPath
-    val keySrc = s"$tag|$tagSuffix"
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(keySrc.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val dir = Paths.get(graft.sources.Artifacts.cacheDir, key)
-    val marker = dir.resolve("_built")
-    val fpRow = Tables.documents(s, d)
-      .agg(count(lit(1)), bit_xor(xxhash64(col("doc_id")))).head()
-    val fp = s"${fpRow.getLong(0)}:${if (fpRow.isNullAt(1)) 0L
-      else fpRow.getLong(1)}"
-    // reachable from concurrent driver threads since r17 (verifiedPairs
-    // is touched by both streamAmendFull arms on a cold artifact cache):
-    // serialize check-then-build per key, re-checking inside the lock
-    graft.sources.Artifacts.withBuildLock(key) {
-      val fresh = Files.exists(marker) &&
-        new String(Files.readAllBytes(marker), "UTF-8").trim == fp &&
-        !sys.env.get("GRAFT_INDEX_REBUILD").contains("1")
-      if (!fresh) {
-        build().write.mode("overwrite")
-          .parquet(dir.resolve("pairs").toString)
-        Files.write(marker, fp.getBytes("UTF-8")) // commit point
-      }
+      keyParts: String*)(build: => DataFrame): DataFrame = {
+    val dir = Artifacts.cached(Artifacts.cacheDir, Artifacts.key(keyParts: _*),
+        Artifacts.idFingerprint(Tables.documents(s, d), "doc_id")) { dir =>
+      build.write.mode("overwrite").parquet(dir.resolve("pairs").toString)
     }
     s.read.parquet(dir.resolve("pairs").toString)
   }
@@ -514,22 +497,9 @@ object DedupQueries {
     * sf0.1 whose one-time cost Bench reports separately). */
   val containmentJoin: Q = (s, d) => containmentPairs(s, d)
 
-  private def containmentPairs(s: SparkSession, d: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val tag = new java.io.File(d).getCanonicalPath
-    val keySrc = s"containment|$tag|trigram|c=0.8|mod17-halfwords"
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(keySrc.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val dir = Paths.get(graft.sources.Artifacts.cacheDir, key)
-    val marker = dir.resolve("_built")
-    val fpRow = Tables.documents(s, d)
-      .agg(count(lit(1)), bit_xor(xxhash64(col("doc_id")))).head()
-    val fp = s"${fpRow.getLong(0)}:${if (fpRow.isNullAt(1)) 0L
-      else fpRow.getLong(1)}"
-    val fresh = Files.exists(marker) &&
-      new String(Files.readAllBytes(marker), "UTF-8").trim == fp &&
-      !sys.env.get("GRAFT_INDEX_REBUILD").contains("1")
-    if (!fresh) {
+  private def containmentPairs(s: SparkSession, d: String): DataFrame =
+    cachedPairs(s, d, "containment", canonical(d), "trigram", "c=0.8",
+        "mod17-halfwords") {
       val docs = Tables.documents(s, d)
       val w = filter(split(lower(col("text")), " "), t => length(t) > 0)
       val frags = docs.filter(col("doc_id") % 17 === 0)
@@ -540,11 +510,7 @@ object DedupQueries {
           shingled(frags, "toks"), "doc_id", "toks",
           shingledDocs(s, d, outCol = "toks"), "doc_id", "toks",
           minContainment = 0.8)
-        .write.mode("overwrite").parquet(dir.resolve("pairs").toString)
-      Files.write(marker, fp.getBytes("UTF-8")) // commit point
     }
-    s.read.parquet(dir.resolve("pairs").toString)
-  }
 
   /** Offline containment build for Bench (the ensureSetsimPairs
     * pattern). */
@@ -552,22 +518,9 @@ object DedupQueries {
     containmentPairs(s, d); ()
   }
 
-  private def linkagePairs(s: SparkSession, d: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val tag = new java.io.File(d).getCanonicalPath
-    val keySrc = s"setsim-linkage|$tag|trigram|j=0.8|mod17"
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(keySrc.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val dir = Paths.get(graft.sources.Artifacts.cacheDir, key)
-    val marker = dir.resolve("_built")
-    val fpRow = Tables.documents(s, d)
-      .agg(count(lit(1)), bit_xor(xxhash64(col("doc_id")))).head()
-    val fp = s"${fpRow.getLong(0)}:${if (fpRow.isNullAt(1)) 0L
-      else fpRow.getLong(1)}"
-    val fresh = Files.exists(marker) &&
-      new String(Files.readAllBytes(marker), "UTF-8").trim == fp &&
-      !sys.env.get("GRAFT_INDEX_REBUILD").contains("1")
-    if (!fresh) {
+  private def linkagePairs(s: SparkSession, d: String): DataFrame =
+    cachedPairs(s, d, "setsim-linkage", canonical(d), "trigram", "j=0.8",
+        "mod17") {
       val left = shingledDocs(s, d, outCol = "toks")
       val right = shingled(
         Tables.documents(s, d).filter(col("doc_id") % 17 === 0)
@@ -577,11 +530,7 @@ object DedupQueries {
       graft.operators.SetSimJoin.joinBetween(
           left, "doc_id", "toks", right, "doc_id", "toks",
           minJaccard = 0.8)
-        .write.mode("overwrite").parquet(dir.resolve("pairs").toString)
-      Files.write(marker, fp.getBytes("UTF-8")) // commit point
     }
-    s.read.parquet(dir.resolve("pairs").toString)
-  }
 
   /** Offline linkage build for Bench (the ensureSetsimPairs pattern). */
   def ensureSetsimLinkage(s: SparkSession, d: String): Unit = {

@@ -1,11 +1,10 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Compaction, Decontam, Dedup, TextSearch, TopK}
-import graft.sources.Tables
+import graft.sources.{Artifacts, Tables}
 
 /** Training-data pipeline queries beyond SURVEY §2's original inventory:
   * CDC compaction, deterministic sampling, PII scrubbing, BM25 retrieval,
@@ -1072,7 +1071,6 @@ object PipelineQueries {
 
   private[graft] def corpusEnd2EndFrom(docs: DataFrame,
       pairs: Option[DataFrame] = None): DataFrame = {
-    import graft.operators.{ManifestDigest, Packing, Shards}
     // S1 quality → S2 exact dedup (min id per digest) → S3 exact
     // 3-shingle Jaccard near-dup at J >= 0.6 (greedy smaller-id;
     // `pairs`, when supplied, is the PERSISTED exact-Jaccard pair
@@ -1178,6 +1176,16 @@ object PipelineQueries {
     corpusDropLedgerFrom(Tables.documents(s, d),
       pairs = Some(DedupQueries.verifiedPairs(s, d)))
 
+  private def canonical(d: String): String =
+    new java.io.File(d).getCanonicalPath
+
+  /** A corpus-state [[Artifacts.cached]] directory keyed by `keyParts`
+    * and fingerprinted by the corpus doc ids. */
+  private def corpusArtifact(docs: DataFrame, keyParts: String*)
+      (build: java.nio.file.Path => Unit): java.nio.file.Path =
+    Artifacts.cached(Artifacts.cacheDir, Artifacts.key(keyParts: _*),
+      Artifacts.idFingerprint(docs, "doc_id"))(build)
+
   /** Day-1 at-rest artifacts of the incremental corpus chain (r13
     * verdict #4), persisted under [[graft.sources.Artifacts.cacheDir]]
     * with the verifiedPairs build-once/fingerprint discipline:
@@ -1204,27 +1212,14 @@ object PipelineQueries {
     * estimated path. */
   private def corpusIncrementalArtifacts(s: SparkSession, d: String,
       cut: Long): java.nio.file.Path = {
-    import java.nio.file.{Files, Paths}
     import graft.operators.{Dedup, IncrementalDedup}
-    val tag = new java.io.File(d).getCanonicalPath
+    val docs = Tables.documents(s, d)
     // v2 (r15): also persists qmeta (per-doc quality metadata +
     // digest) and s3ids — the membership frames a RETRACTION against
     // this at-rest state needs (keeper re-election is digest-local
     // only with the per-doc mapping)
-    val keySrc = s"corpus-incr|$tag|cut=$cut|j=0.6|h=32b8|v2"
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(keySrc.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val dir = Paths.get(graft.sources.Artifacts.cacheDir, key)
-    val marker = dir.resolve("_built")
-    val docs = Tables.documents(s, d)
-    val fpRow = docs.agg(count(lit(1)),
-      bit_xor(xxhash64(col("doc_id")))).head()
-    val fp = s"${fpRow.getLong(0)}:${if (fpRow.isNullAt(1)) 0L
-      else fpRow.getLong(1)}"
-    val fresh = Files.exists(marker) &&
-      new String(Files.readAllBytes(marker), "UTF-8").trim == fp &&
-      !sys.env.get("GRAFT_INDEX_REBUILD").contains("1")
-    if (!fresh) {
+    corpusArtifact(docs, "corpus-incr", canonical(d), s"cut=$cut", "j=0.6",
+        "h=32b8", "v2") { dir =>
       val day1 = docs.filter(col("doc_id") < cut)
       val q1 = qualityGate(day1).cache()
       val keep1 = Dedup.exactByContent(q1, "doc_id", "text")
@@ -1260,9 +1255,7 @@ object PipelineQueries {
       benchGrams.write.mode("overwrite")
         .parquet(dir.resolve("benchgrams").toString)
       q1.unpersist()
-      Files.write(marker, fp.getBytes("UTF-8")) // commit point
     }
-    dir
   }
 
   /** The day-1/day-2 id cut of the incremental gate: the last third of
@@ -1415,23 +1408,10 @@ object PipelineQueries {
     *  - `benchgrams` — static decontam probe set (day-1's). */
   private def corpusDay3Artifacts(s: SparkSession, d: String,
       c1: Long, c2: Long): java.nio.file.Path = {
-    import java.nio.file.{Files, Paths}
     import graft.operators.IncrementalDedup
-    val tag = new java.io.File(d).getCanonicalPath
-    val keySrc = s"corpus-day3|$tag|c1=$c1|c2=$c2|j=0.6|h=32b8|v2"
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(keySrc.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val dir = Paths.get(graft.sources.Artifacts.cacheDir, key)
-    val marker = dir.resolve("_built")
     val docs = Tables.documents(s, d)
-    val fpRow = docs.agg(count(lit(1)),
-      bit_xor(xxhash64(col("doc_id")))).head()
-    val fp = s"${fpRow.getLong(0)}:${if (fpRow.isNullAt(1)) 0L
-      else fpRow.getLong(1)}"
-    val fresh = Files.exists(marker) &&
-      new String(Files.readAllBytes(marker), "UTF-8").trim == fp &&
-      !sys.env.get("GRAFT_INDEX_REBUILD").contains("1")
-    if (!fresh) {
+    corpusArtifact(docs, "corpus-day3", canonical(d), s"c1=$c1", s"c2=$c2",
+        "j=0.6", "h=32b8", "v2") { dir =>
       val day1 = corpusIncrementalArtifacts(s, d, c1)
       val digests1 = s.read.parquet(day1.resolve("digests").toString)
       val sigs1 = IncrementalDedup.readIndex(s,
@@ -1465,9 +1445,7 @@ object PipelineQueries {
         dir.resolve("banded12").toString)
       benchGrams.write.mode("overwrite")
         .parquet(dir.resolve("benchgrams").toString)
-      Files.write(marker, fp.getBytes("UTF-8")) // commit point
     }
-    dir
   }
 
   private def day3Cuts(docs: DataFrame): (Long, Long) = {
@@ -1542,30 +1520,12 @@ object PipelineQueries {
     * so artifact state and batch chain can never drift. */
   private def corpusRetractArtifacts(s: SparkSession, d: String)
       : java.nio.file.Path = {
-    import java.nio.file.{Files, Paths}
-    val tag = new java.io.File(d).getCanonicalPath
+    val docs = Tables.documents(s, d)
     // v2 (r16): also persists the band-partitioned S2 signature index —
     // the amendment's fresh-pair candidate probe (delta-sized, vs a
     // full corpus text scan)
-    val keySrc = s"corpus-retract|$tag|j=0.6|h=32b8|v2"
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(keySrc.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val dir = Paths.get(graft.sources.Artifacts.cacheDir, key)
-    val marker = dir.resolve("_built")
-    val docs = Tables.documents(s, d)
-    val fpRow = docs.agg(count(lit(1)),
-      bit_xor(xxhash64(col("doc_id")))).head()
-    val fp = s"${fpRow.getLong(0)}:${if (fpRow.isNullAt(1)) 0L
-      else fpRow.getLong(1)}"
-    // reachable from concurrent driver threads since r17 (the
-    // streamAmendFull one-shot future races streamAmendRun on a cold
-    // artifact cache): serialize the check-then-build per key, and
-    // RE-CHECK freshness inside the lock so the loser becomes a no-op
-    graft.sources.Artifacts.withBuildLock(key) {
-    val fresh = Files.exists(marker) &&
-      new String(Files.readAllBytes(marker), "UTF-8").trim == fp &&
-      !sys.env.get("GRAFT_INDEX_REBUILD").contains("1")
-    if (!fresh) {
+    corpusArtifact(docs, "corpus-retract", canonical(d), "j=0.6", "h=32b8",
+        "v2") { dir =>
       val st = corpusStages(docs, Some(DedupQueries.verifiedPairs(s, d)))
       st.quality
         .select(col("doc_id"), col("lang"), col("n_tokens"),
@@ -1590,10 +1550,7 @@ object PipelineQueries {
       IncrementalDedup.writeBandedIndex(
         s.read.parquet(dir.resolve("sigindex").toString),
         dir.resolve("banded").toString)
-      Files.write(marker, fp.getBytes("UTF-8")) // commit point
     }
-    }
-    dir
   }
 
   def ensureCorpusRetractArtifacts(s: SparkSession, d: String): Unit = {
@@ -2307,23 +2264,10 @@ object PipelineQueries {
     * retraction DELTA itself stays blast-radius-sized. */
   private def corpusLifecycleArtifacts(s: SparkSession, d: String,
       c1: Long, c2: Long): java.nio.file.Path = {
-    import java.nio.file.{Files, Paths}
     import graft.operators.IncrementalDedup
-    val tag = new java.io.File(d).getCanonicalPath
-    val keySrc = s"corpus-lifecycle|$tag|c1=$c1|c2=$c2|mod17=7|v1"
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(keySrc.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val dir = Paths.get(graft.sources.Artifacts.cacheDir, key)
-    val marker = dir.resolve("_built")
     val docs = Tables.documents(s, d)
-    val fpRow = docs.agg(count(lit(1)),
-      bit_xor(xxhash64(col("doc_id")))).head()
-    val fp = s"${fpRow.getLong(0)}:${if (fpRow.isNullAt(1)) 0L
-      else fpRow.getLong(1)}"
-    val fresh = Files.exists(marker) &&
-      new String(Files.readAllBytes(marker), "UTF-8").trim == fp &&
-      !sys.env.get("GRAFT_INDEX_REBUILD").contains("1")
-    if (!fresh) {
+    corpusArtifact(docs, "corpus-lifecycle", canonical(d), s"c1=$c1",
+        s"c2=$c2", "mod17=7", "v1") { dir =>
       val day12 = corpusDay3Artifacts(s, d, c1, c2)
       val qmeta = s.read.parquet(day12.resolve("qmeta12").toString)
       val s3ids = s.read.parquet(day12.resolve("s3ids12").toString)
@@ -2358,9 +2302,7 @@ object PipelineQueries {
         dir.resolve("banded").toString)
       benchGrams.write.mode("overwrite")
         .parquet(dir.resolve("benchgrams").toString)
-      Files.write(marker, fp.getBytes("UTF-8")) // commit point
     }
-    dir
   }
 
   def ensureCorpusLifecycleArtifacts(s: SparkSession, d: String): Unit = {
@@ -2439,10 +2381,6 @@ object PipelineQueries {
       .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("total_chars"))
   }
 
-  /** Where IVF-PQ index artifacts persist across runs (build-once/
-    * search-many) — the shared artifact root layouts also use. */
-  private def indexCacheDir: String = graft.sources.Artifacts.cacheDir
-
   /** Registered PQ/IVF-PQ parameterizations — named ONCE, shared with
     * [[graft.RecallBench]] so the per-round recall artifact measures
     * exactly what the gates run (round-12 verdict #1). */
@@ -2459,7 +2397,7 @@ object PipelineQueries {
     // plain scan: the fingerprint agg stays a single-column metadata-
     // cheap job; buildOrLoad repartitions internally on a build miss
     graft.operators.IvfPq.buildOrLoad(Tables.embeddings(s, d),
-      indexCacheDir, tag = new java.io.File(d).getCanonicalPath,
+      Artifacts.cacheDir, tag = new java.io.File(d).getCanonicalPath,
       lists = IvfPqLists, // ≈ √n at the bench SF (kmeansCentroids sizing)
       m = PqM, k = PqKCodes)
 
@@ -3200,7 +3138,7 @@ object PipelineQueries {
       cut: Long) =
     graft.operators.IvfPq.buildOrLoad(
       Tables.embeddings(s, d).filter(col("vec_id") < cut),
-      indexCacheDir,
+      Artifacts.cacheDir,
       tag = new java.io.File(d).getCanonicalPath + s"|day1<$cut",
       lists = IvfPqLists, m = PqM, k = PqKCodes)
 
@@ -4095,12 +4033,10 @@ object PipelineQueries {
     * Returns (basePath, summaryPath). */
   private def ensureMvArtifacts(s: SparkSession, d: String)
       : (String, String) = {
-    val dir = java.nio.file.Paths.get(graft.sources.Artifacts.cacheDir,
-      "mv_rewrite_" + java.security.MessageDigest.getInstance("MD5")
-        .digest(new java.io.File(d).getCanonicalPath.getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString.take(16))
-    val marker = dir.resolve("_built")
-    if (!java.nio.file.Files.exists(marker)) {
+    // constant fingerprint: an existing artifact is fresh (a lineitem
+    // scan per call would cost more than the rollup saves)
+    val dir = Artifacts.cached(Artifacts.cacheDir,
+        "mv_rewrite_" + Artifacts.key(canonical(d)), "ok") { dir =>
       Tables.lineitem(s, d)
         .select("l_returnflag", "l_linestatus", "l_quantity", "l_shipdate")
         .write.mode("overwrite").parquet(dir.resolve("base").toString)
@@ -4109,8 +4045,6 @@ object PipelineQueries {
         .agg(count(lit(1)).as("cnt"), sum("l_quantity").as("sum_qty"),
           min("l_shipdate").as("min_ship"), max("l_shipdate").as("max_ship"))
         .write.mode("overwrite").parquet(dir.resolve("summary").toString)
-      java.nio.file.Files.createDirectories(dir)
-      java.nio.file.Files.write(marker, "ok".getBytes("UTF-8"))
     }
     (dir.resolve("base").toString, dir.resolve("summary").toString)
   }

@@ -188,8 +188,9 @@ object TextQueries {
     * sf0.1 vs 1.3 s at 0.7), while the planted twins sit far above
     * either cut. */
   val neardupRich: Q = (s, d) =>
-    DedupQueries.cachedPairs(s, d, "rich-pairs|trigram|j=0.7",
-      () => graft.operators.SetSimJoin.joinByJaccard(
+    DedupQueries.cachedPairs(s, d, new java.io.File(d).getCanonicalPath,
+        "rich-pairs|trigram|j=0.7")(
+      graft.operators.SetSimJoin.joinByJaccard(
         DedupQueries.shingled(richDocs(s, d).select("doc_id", "text"),
           "shingles"),
         "doc_id", "shingles", minJaccard = 0.7))

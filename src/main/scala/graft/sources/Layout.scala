@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -25,53 +23,29 @@ import org.apache.spark.sql.functions._
   *    network cost every time). LayoutSpec asserts the bucketed
   *    sort-merge join has NO shuffle exchange on either input.
   *
-  * Both layouts are one-time artifacts cached like
-  * [[graft.operators.IvfPq.buildOrLoad]]: keyed by source path, with a
-  * source-fingerprint (row count + id-hash xor) marker so a regenerated
-  * source table triggers a rebuild rather than silently serving a stale
-  * layout; a fresh JVM re-REGISTERS existing bucketed files in its
-  * catalog instead of rewriting them. Same single-host caveat as
-  * IvfPq.buildOrLoad: concurrent writers race the overwrite; production
+  * Both layouts are one-time [[Artifacts.cached]] artifacts keyed by
+  * source path and fingerprinted by the source's id column, so a
+  * regenerated source table triggers a rebuild rather than silently
+  * serving a stale layout; a fresh JVM re-REGISTERS existing bucketed
+  * files in its catalog instead of rewriting them. Production
   * deployments own these artifacts in a real metastore.
   */
 object Layout {
 
-  private def keyOf(parts: String*): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(parts.mkString("|").getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-
-  /** count + order-independent id-hash xor — the IvfPq.buildOrLoad
-    * fingerprint recipe (bit_xor cannot overflow under ANSI). Caveat,
-    * by design: the fingerprint covers the ID COLUMN only — content
-    * changes under unchanged ids do not trigger a rebuild (the testdata
-    * generator never does that; a production metastore would own real
-    * table versioning). */
-  private def fingerprint(df: DataFrame, idCol: String): String = {
-    val r = df.agg(count(lit(1)), bit_xor(xxhash64(col(idCol)))).head()
-    s"${r.getLong(0)}:${if (r.isNullAt(1)) 0L else r.getLong(1)}"
-  }
-
-  private def isFresh(marker: java.nio.file.Path, fp: String): Boolean =
-    Files.exists(marker) &&
-      new String(Files.readAllBytes(marker), "UTF-8").trim == fp &&
-      !sys.env.get("GRAFT_INDEX_REBUILD").contains("1")
+  private def sourceKey(d: String, parts: String*): String =
+    Artifacts.key(new java.io.File(d).getCanonicalPath +: parts: _*)
 
   /** Events re-laid-out as parquet partitioned by `event_date`
     * (`to_date(ts)` in the session's UTC). Returns the partitioned
     * read — date filters on it prune at file listing. */
   def partitionedEvents(s: SparkSession, d: String): DataFrame = {
-    val dir = Paths.get(Artifacts.cacheDir,
-      "events_by_date_" + keyOf(new java.io.File(d).getCanonicalPath))
-    val marker = dir.resolve("_built")
-    val fp = fingerprint(Tables.events(s, d), "event_id")
-    if (!isFresh(marker, fp)) {
+    val dir = Artifacts.cached(Artifacts.cacheDir,
+        "events_by_date_" + sourceKey(d),
+        Artifacts.idFingerprint(Tables.events(s, d), "event_id")) { dir =>
       Tables.events(s, d)
         .withColumn("event_date", to_date(col("ts")))
         .write.mode("overwrite").partitionBy("event_date")
         .parquet(dir.resolve("data").toString)
-      Files.createDirectories(dir)
-      Files.write(marker, fp.getBytes("UTF-8")) // commit point
     }
     s.read.parquet(dir.resolve("data").toString)
   }
@@ -85,33 +59,26 @@ object Layout {
     * files with the same bucket spec instead of rewriting them. */
   def bucketedOrdersWithCustomers(s: SparkSession, d: String,
       buckets: Int = 8): DataFrame = {
-    val key = keyOf(new java.io.File(d).getCanonicalPath, buckets.toString)
+    val key = sourceKey(d, buckets.toString)
 
     def ensure(tbl: String, df: DataFrame, idCol: String,
         bucketCol: String): Unit = {
-      val path = Paths.get(Artifacts.cacheDir, tbl)
-      val marker = path.resolve("_built")
-      val fp = fingerprint(df, idCol)
       // a registered table must STILL pass the fingerprint check — a
       // source regenerated within this JVM's lifetime would otherwise
       // silently serve the stale bucketed layout (r4 advice)
-      if (s.catalog.tableExists(tbl)) {
-        if (isFresh(marker, fp)) return
-        s.sql(s"DROP TABLE $tbl")
-      }
-      if (isFresh(marker, fp)) {
-        // files already laid out by a prior JVM: register, don't rewrite
-        // (bucket ids live in the file names Spark wrote)
-        val schema = df.schema.toDDL
-        s.sql(s"""CREATE TABLE $tbl ($schema) USING PARQUET
-                  CLUSTERED BY ($bucketCol) SORTED BY ($bucketCol)
-                  INTO $buckets BUCKETS LOCATION '$path'""")
-      } else {
+      val path = Artifacts.cached(Artifacts.cacheDir, tbl,
+          Artifacts.idFingerprint(df, idCol)) { path =>
+        if (s.catalog.tableExists(tbl)) s.sql(s"DROP TABLE $tbl")
         df.write.bucketBy(buckets, bucketCol).sortBy(bucketCol)
           .option("path", path.toString)
           .mode("overwrite").saveAsTable(tbl)
-        Files.write(marker, fp.getBytes("UTF-8")) // commit point
       }
+      // files already laid out by a prior JVM: register, don't rewrite
+      // (bucket ids live in the file names Spark wrote)
+      if (!s.catalog.tableExists(tbl))
+        s.sql(s"""CREATE TABLE $tbl (${df.schema.toDDL}) USING PARQUET
+                  CLUSTERED BY ($bucketCol) SORTED BY ($bucketCol)
+                  INTO $buckets BUCKETS LOCATION '$path'""")
     }
 
     ensure(s"graft_orders_b_$key", Tables.orders(s, d),
@@ -137,12 +104,9 @@ object Layout {
     * them. Artifact-cached with the fingerprint-marker protocol. */
   def clusteredEventsDir(s: SparkSession, d: String,
       files: Int = 16): String = {
-    val dir = Paths.get(Artifacts.cacheDir,
-      "events_by_user_" + keyOf(new java.io.File(d).getCanonicalPath,
-        files.toString))
-    val marker = dir.resolve("_built")
-    val fp = fingerprint(Tables.events(s, d), "event_id")
-    if (!isFresh(marker, fp)) {
+    Artifacts.cached(Artifacts.cacheDir,
+        "events_by_user_" + sourceKey(d, files.toString),
+        Artifacts.idFingerprint(Tables.events(s, d), "event_id")) { dir =>
       Tables.events(s, d)
         .repartitionByRange(files, col("user_id"))
         .sortWithinPartitions("user_id")
@@ -155,9 +119,7 @@ object Layout {
         .agg(min("user_id").as("mn"), max("user_id").as("mx"))
         .coalesce(1)
         .write.mode("overwrite").parquet(dir.resolve("zonemap").toString)
-      Files.write(marker, fp.getBytes("UTF-8")) // commit point
-    }
-    dir.toString
+    }.toString
   }
 
   /** Surviving-file-list cap for the sidecar-pruned scans (round-13
@@ -215,12 +177,10 @@ object Layout {
     * optional bloom filters per column chunk). */
   def bloomIndexedEventsDir(s: SparkSession, d: String,
       files: Int = 16): String = {
-    val dir = Paths.get(Artifacts.cacheDir,
-      "events_bloomidx_" + keyOf(new java.io.File(d).getCanonicalPath,
-        files.toString, bloomBits.toString, bloomK.toString))
-    val marker = dir.resolve("_built")
-    val fp = fingerprint(Tables.events(s, d), "event_id")
-    if (!isFresh(marker, fp)) {
+    Artifacts.cached(Artifacts.cacheDir,
+        "events_bloomidx_" + sourceKey(d, files.toString,
+          bloomBits.toString, bloomK.toString),
+        Artifacts.idFingerprint(Tables.events(s, d), "event_id")) { dir =>
       Tables.events(s, d)
         .repartition(files, col("event_id"))
         .write.mode("overwrite").parquet(dir.resolve("data").toString)
@@ -230,9 +190,7 @@ object Layout {
           .bloomAgg(col("event_id"), bloomBits, bloomK).as("bf"))
         .coalesce(1)
         .write.mode("overwrite").parquet(dir.resolve("bloom").toString)
-      Files.write(marker, fp.getBytes("UTF-8")) // commit point
-    }
-    dir.toString
+    }.toString
   }
 
   /** Events whose `event_id` is in `ids`, read ONLY from files whose

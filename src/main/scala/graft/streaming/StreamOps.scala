@@ -1524,7 +1524,15 @@ object StreamOps {
     * contract, same as every streaming spec — bounded by the doc-id
     * range); production deltas arrive from a real source and the sink
     * path is identical. */
-  def streamUpsert(spark: SparkSession, dir: String): DataFrame = {
+  def streamUpsert(spark: SparkSession, dir: String): DataFrame =
+    upsertFixture(spark, dir, "graft_supsert").current(spark).get
+
+  /** The three CDC batches of [[streamUpsert]] streamed through a fresh
+    * [[StreamUpsert]] sink under `prefix` temp dirs; returns the sink
+    * with every batch committed. The checkpoint is deleted once the
+    * query stops — nothing reads it afterwards. */
+  private def upsertFixture(spark: SparkSession, dir: String,
+      prefix: String): StreamUpsert = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val n = graft.sources.Tables.documents(spark, dir)
@@ -1539,19 +1547,17 @@ object StreamOps {
       ids.filter(_ % 7 == 0).map(i => (i, "", true))
     val b2 = ids.filter(_ % 3 == 0).map(i => (i, base(i) + " u3", false)) ++
       ids.filter(_ % 11 == 0).map(i => (i, "", true))
-    val baseDir = java.nio.file.Files
-      .createTempDirectory("graft_supsert").toString
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_supsert_ckpt").toString
+    val baseDir = java.nio.file.Files.createTempDirectory(prefix).toString
+    val ckpt = java.nio.file.Files.createTempDirectory(prefix + "_ckpt")
     val sink = new StreamUpsert(baseDir, "doc_id", "is_delete")
     val input = MemoryStream[(Long, String, Boolean)]
     val q = input.toDF().toDF("doc_id", "text", "is_delete")
-      .writeStream.option("checkpointLocation", ckpt)
+      .writeStream.option("checkpointLocation", ckpt.toString)
       .foreachBatch(sink.write _).start()
     try Seq(b0, b1, b2).foreach { b =>
       input.addData(b); q.processAllAvailable()
-    } finally q.stop()
-    sink.current(spark).get
+    } finally { q.stop(); deleteTree(ckpt) }
+    sink
   }
 
   /** Time travel over the [[StreamUpsert]] snapshot store: the same
@@ -1562,32 +1568,7 @@ object StreamOps {
     * committed snapshots, no log replay. The oracle rebuilds each
     * version's state closed-form and reproduces the digest. */
   def timeTravel(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val n = graft.sources.Tables.documents(spark, dir)
-      .agg(max(col("doc_id"))).head.getLong(0) + 1
-    def md5hex(s: String): String =
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    def base(i: Long) = "d " + md5hex(i.toString)
-    val ids = 0L until n
-    val b0 = ids.map(i => (i, base(i), false))
-    val b1 = ids.filter(_ % 5 == 0).map(i => (i, base(i) + " u2", false)) ++
-      ids.filter(_ % 7 == 0).map(i => (i, "", true))
-    val b2 = ids.filter(_ % 3 == 0).map(i => (i, base(i) + " u3", false)) ++
-      ids.filter(_ % 11 == 0).map(i => (i, "", true))
-    val baseDir = java.nio.file.Files
-      .createTempDirectory("graft_ttravel").toString
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_ttravel_ckpt").toString
-    val sink = new StreamUpsert(baseDir, "doc_id", "is_delete")
-    val input = MemoryStream[(Long, String, Boolean)]
-    val q = input.toDF().toDF("doc_id", "text", "is_delete")
-      .writeStream.option("checkpointLocation", ckpt)
-      .foreachBatch(sink.write _).start()
-    try Seq(b0, b1, b2).foreach { b =>
-      input.addData(b); q.processAllAvailable()
-    } finally q.stop()
+    val sink = upsertFixture(spark, dir, "graft_ttravel")
     sink.versions().map { v =>
       graft.operators.ManifestDigest
         .manifest(sink.at(spark, v), "doc_id", Seq("text"), buckets = 1)

@@ -13,7 +13,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * contract, runtime `experimental` hooks are written only by
   * `GraftPlanBridge.attach`, and no strong per-session map pins sessions.
   * Unlike [[CollectSiteLintSpec]] this scans the top-level harness mains
-  * too: they build sessions like everyone else. */
+  * too: they build sessions like everyone else. The same one-seam rule
+  * holds for at-rest artifacts: `graft.sources.Artifacts` alone owns the
+  * build-once marker protocol. */
 class SessionSeamLintSpec extends AnyFunSuite {
 
   private def sources(root: String): Seq[(Path, String)] = {
@@ -56,6 +58,18 @@ class SessionSeamLintSpec extends AnyFunSuite {
       """experimental\s*\.\s*extra(Strategies|Optimizations)\s*=(?!=)""",
       "org/apache/spark/sql/GraftPlanBridge.scala")
     assert(bad.isEmpty, s"inject through graft.api.GraftExtensions: $bad")
+  }
+
+  test("the artifact marker protocol lives only in Artifacts") {
+    val sites = for {
+      re <- Seq("\"_built\"", "GRAFT_INDEX_REBUILD")
+      (p, code) <- mainSrc
+      if !p.toString.endsWith("graft/sources/Artifacts.scala")
+      n = re.r.findAllMatchIn(code).size
+      if n > 0
+    } yield s"$re x$n in $p"
+    assert(sites.isEmpty,
+      s"build artifacts through graft.sources.Artifacts.cached: $sites")
   }
 
   test("no strong per-session ConcurrentHashMap set or map") {

@@ -122,7 +122,6 @@ class SqlSurfaceSpec extends SparkSpec {
   }
 
   test("chunk_windows generator matches Chunking.slidingWindows") {
-    import org.apache.spark.sql.functions._
     val df = spark.createDataFrame(Seq(
       (1L, "a b c d e f g"), (2L, "x y"), (3L, ""))).toDF("id", "text")
     val op = graft.operators.Chunking
@@ -137,7 +136,6 @@ class SqlSurfaceSpec extends SparkSpec {
   }
 
   test("sentence_split + greedy_chunks reproduce Chunking.sentences") {
-    import org.apache.spark.sql.functions._
     val df = spark.createDataFrame(Seq(
       (1L, "a b c. d e! f g? h"),
       (2L, "a. b c d e f. g"),

@@ -54,7 +54,6 @@ class ClusteringSpec extends SparkSpec {
   test("silhouetteCentroid hand geometry: symmetric 2-cluster layout, " +
       "coincident-centroid zero, degenerates raise") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
     // A: (0,0),(0,2) -> centroid (0,1); B: (4,0),(4,2) -> (4,1).
     // Every point: a = 1, b = sqrt(17), s = 1 - 1/sqrt(17);
     // floor(s*1e6) = 757464

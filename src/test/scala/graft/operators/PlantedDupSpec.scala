@@ -65,7 +65,6 @@ class PlantedDupSpec extends SparkSpec {
     // original documents survive: copies are doomed, representative
     // relations are untouched (the formal equivalence the collapse
     // preamble claims)
-    import spark.implicits._
     val docs = planted()
     val withCopies = docs.unionAll(docs
       .select((col("doc_id") + 900000L).as("doc_id"), col("text")))
@@ -106,7 +105,6 @@ class PlantedDupSpec extends SparkSpec {
   }
 
   test("simhash hamming distance separates planted dups from unrelated") {
-    import spark.implicits._
     val docs = planted()
     val sigs = docs.select(col("doc_id"), Dedup.simhash(col("text")).as("s"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

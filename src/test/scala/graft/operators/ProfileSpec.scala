@@ -73,7 +73,6 @@ class ProfileSpec extends SparkSpec {
   test("categoryEntropy: uniform = ln k (norm 1), single category = " +
       "0 with NULL norm, NULL categories count") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
     val uni = Seq("a", "b", "c", "d").map(("g1", _)) ++
       Seq.fill(3)(("g2", "x")) ++
       Seq(("g3", "x"), ("g3", null))

@@ -88,7 +88,7 @@ class SelectionSpec extends SparkSpec {
   test("conformalQuantile: hand ranks, the +1 coverage bump, and the " +
       "too-few-rows raise") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.{col, floor}
+    import org.apache.spark.sql.functions.floor
     // group g: scores 1..19 -> n=19, alpha=0.1: rank = ceil(20*0.9)
     // = 18 -> qhat = 18; a plain 0.9 quantile would pick 17.1-ish
     val df = (1 to 19).map(v => ("g", v.toDouble)).toDF("grp", "s")

@@ -3,7 +3,6 @@ package graft.operators
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 

@@ -1,7 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.Row
-
 import graft.SparkSpec
 
 /** Closed-form oracles for the hashing-trick featurizer. */

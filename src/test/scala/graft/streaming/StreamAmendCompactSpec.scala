@@ -1,7 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.functions._
-
 import graft.SparkSpec
 
 /** Overlay compaction on the amendment stream (r16 verdict #3 — the
