@@ -6,10 +6,13 @@ import graft.functions.GraftFunctions
 
 /** The whole engine surface as one session extension: every function of
   * the [[GraftFunctions]] table, the planner strategies for the custom
-  * TopKPerGroup / AsOfJoin nodes, the filter pushdown rules through them
-  * and the materialized-summary rewrite. `Engine.builder` applies it; on a
-  * cluster `--conf spark.sql.extensions=graft.api.GraftExtensions` does
-  * the same with no driver code. */
+  * TopKPerGroup / AsOfJoin nodes, the filter pushdown rules through them,
+  * the materialized-summary rewrite and the query-stage rule that makes a
+  * broadcast of driver-held rows job-free
+  * ([[org.apache.spark.sql.JobFreeLocalBroadcast]]). `Engine.builder`
+  * applies it; on a cluster
+  * `--conf spark.sql.extensions=graft.api.GraftExtensions` does the same
+  * with no driver code. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     import org.apache.spark.sql.catalyst.FunctionIdentifier
@@ -23,6 +26,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectOptimizerRule(_ => graft.plans.PushFilterThroughTopKPerGroup)
     e.injectOptimizerRule(_ => graft.plans.PushFilterThroughAsOfJoin)
     e.injectOptimizerRule(s => graft.plans.RewriteAggregateToSummary(s))
+    e.injectQueryStagePrepRule(_ =>
+      org.apache.spark.sql.JobFreeLocalBroadcast)
   }
 }
 

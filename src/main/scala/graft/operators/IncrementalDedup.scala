@@ -124,30 +124,62 @@ object IncrementalDedup {
     * verdict path. `vs_index` is the provenance the consumer needs:
     * an index-side partner names AT-REST content (remappable if that
     * content leaves in the same step), a batch-sibling partner names
-    * the batch's NEW content. */
+    * the batch's NEW content.
+    *
+    * Cost ∝ delta, never corpus, in two passes: the batch is banded
+    * once (one task) and its (band, band_hash) keys collected; then ONE
+    * map-side pass over the index rows sharing those keys returns, per
+    * partition and bucket, the row count and — while that count is
+    * within `maxBucket` — the ids. A bucket whose population (batch and
+    * index rows together) stays within the cap was within it in every
+    * partition, so all its ids arrived; a hot corpus template ships at
+    * most `maxBucket` ids a partition, never its population. The pairs
+    * are formed on the driver. The batch-key fetch holds at most
+    * `maxRows` rows, else it raises (the caller's blast-radius
+    * posture); the index pass returns at most one row per partition
+    * and batch key by construction. */
   def candidatePairs(indexBands: DataFrame, batch: DataFrame,
       idCol: String, textCol: String, numHashes: Int = 32,
-      bands: Int = 8, maxBucket: Int = 300): DataFrame = {
-    val bNew = banded(signatures(batch, idCol, textCol, numHashes),
-      numHashes, bands)
-    val bOld = indexBands.select("id", "band", "band_hash")
-    val bucketSizes = bNew.select(col("band"), col("band_hash"))
-      .unionAll(bOld.select(col("band"), col("band_hash")))
-      .groupBy("band", "band_hash").agg(count(lit(1)).as("bsz"))
-      .filter(col("bsz").between(2, maxBucket))
-    val pNew = bNew.join(bucketSizes, Seq("band", "band_hash"))
-    val pOld = bOld.join(bucketSizes, Seq("band", "band_hash"))
-    pNew.select(col("band"), col("band_hash"), col("id").as("nid"))
-      .join(pOld.select(col("band"), col("band_hash"),
-        col("id").as("oid")), Seq("band", "band_hash"))
-      .select(col("nid"), col("oid"), lit(true).as("vs_index"))
-      .unionAll(pNew.select(col("band"), col("band_hash"),
-          col("id").as("nid"))
-        .join(pNew.select(col("band"), col("band_hash"),
-          col("id").as("oid")), Seq("band", "band_hash"))
-        .filter(col("oid") < col("nid"))
-        .select(col("nid"), col("oid"), lit(false).as("vs_index")))
-      .distinct()
+      bands: Int = 8, maxBucket: Int = 300,
+      maxRows: Int = 5000000): DataFrame = {
+    val s = batch.sparkSession
+    import s.implicits._
+    val keyRows = banded(signatures(batch, idCol, textCol, numHashes),
+        numHashes, bands)
+      .select(col("band").cast("int"), col("band_hash").cast("long"),
+        col("id").cast("long"))
+      .coalesce(1).limit(maxRows + 1).collect()
+    require(keyRows.length <= maxRows, s"candidatePairs: batch bands " +
+      s"beyond $maxRows rows — a batch this size is a rebuild, not a delta")
+    val batchIds = keyRows.toSeq
+      .groupMap(r => (r.getInt(0), r.getLong(1)))(_.getLong(2))
+    val index: Map[(Int, Long), (Long, Seq[Long])] =
+      if (batchIds.isEmpty) Map.empty
+      else indexBands.join(
+          broadcast(batchIds.keys.toSeq.toDF("band", "band_hash")),
+          Seq("band", "band_hash"), "left_semi")
+        .select(col("band").cast("int"), col("band_hash").cast("long"),
+          col("id").cast("long"))
+        .as[(Int, Long, Long)]
+        .mapPartitions { rows =>
+          val m = scala.collection.mutable.Map
+            .empty[(Int, Long), (Long, List[Long])]
+          rows.foreach { case (b, h, id) =>
+            val (n, ids) = m.getOrElse((b, h), (0L, Nil))
+            m((b, h)) = (n + 1, if (n < maxBucket) id :: ids else Nil)
+          }
+          m.iterator.map { case ((b, h), (n, ids)) =>
+            (b, h, n, ids: Seq[Long]) }
+        }
+        .collect().toSeq
+        .groupMapReduce(r => (r._1, r._2))(r => (r._3, r._4)) {
+          case ((n1, a), (n2, b)) => (n1 + n2, a ++ b) }
+    batchIds.toSeq.flatMap { case (k, nids) =>
+      val (n, oids) = index.getOrElse(k, (0L, Nil))
+      if (nids.size + n < 2 || nids.size + n > maxBucket) Nil
+      else nids.flatMap(nid => oids.map(o => (nid, o, true)) ++
+        nids.filter(_ < nid).map(o => (nid, o, false)))
+    }.distinct.toDF("nid", "oid", "vs_index")
   }
 
   /** Post-ingest index: prior signatures plus the batch SURVIVORS

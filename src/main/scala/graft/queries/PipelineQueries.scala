@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Compaction, Decontam, Dedup, TextSearch, TopK}
@@ -1605,14 +1605,16 @@ object PipelineQueries {
     * keepers, fresh-verdict candidates, their pair partners) lives on
     * the DRIVER as bounded id sets — each stage is ONE map-side scan
     * of a corpus-sized artifact probing a broadcast LOCAL relation
-    * (local broadcasts launch no subquery jobs, so the whole delta is
-    * ~7 short scans instead of a deep nest of broadcast stages — the
-    * nested-DataFrame formulation measured 25–35 s at sf0.1 on pure
-    * stage latency, this one ~3 s). Every collect is bounded by
-    * `maxBlast` with a loud raise: a takedown whose blast radius
-    * approaches the corpus IS a batch rebuild, and pretending
-    * otherwise would OOM the driver — the [[graft.operators.Mixing]]
-    * bounded-collect contract (see CollectSiteLintSpec). */
+    * ([[probe]]; on a graft session the JobFreeLocalBroadcast
+    * query-stage rule hands such a broadcast its rows without a job, so
+    * the whole delta is ~7 short scans instead of a deep nest of
+    * broadcast stages — the nested-DataFrame formulation measured
+    * 25–35 s at sf0.1 on pure stage latency, this one ~3 s). Every
+    * collect is bounded by `maxBlast` with a loud raise: a takedown
+    * whose blast radius approaches the corpus IS a batch rebuild, and
+    * pretending otherwise would OOM the driver — the
+    * [[graft.operators.Mixing]] bounded-collect contract (see
+    * CollectSiteLintSpec). */
   private[graft] def corpusRetractDelta(docs: DataFrame,
       retracted: DataFrame, qmeta: DataFrame, s2ids: DataFrame,
       s3ids: DataFrame, s4meta: DataFrame, benchGrams: DataFrame,
@@ -1651,6 +1653,14 @@ object PipelineQueries {
     * what a retraction carries. */
   private[graft] def noPayload(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), col("lang"), col("text")).limit(0)
+
+  /** A driver-held set as a one-column broadcast relation named `name`:
+    * the map-side probe side of every delta join. On a graft session
+    * the [[org.apache.spark.sql.JobFreeLocalBroadcast]] query-stage
+    * rule hands the broadcast these rows without a collect job. */
+  private[graft] def probe[T: Encoder](s: SparkSession, set: Iterable[T],
+      name: String = "doc_id"): DataFrame =
+    broadcast(s.createDataset(set.toSeq).toDF(name))
 
   /** Membership-delta sets of a general corpus UPSERT — old content of
     * `rIds` leaves, new content of `inserted` (⊆ rIds, same doc ids)
@@ -1732,9 +1742,6 @@ object PipelineQueries {
       boundedAt(df, what, maxStrBlast)(row)
     def ids(df: DataFrame, what: String): Set[Long] =
       bounded(df, what)(_.getLong(0)).toSet
-    /** Local-relation broadcast: no subquery job, pure map-side probe. */
-    def probe(set: Iterable[Long]): DataFrame =
-      broadcast(set.toSeq.toDF("doc_id"))
 
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
@@ -1770,7 +1777,8 @@ object PipelineQueries {
       if (inserted.isEmpty) None
       else Some(scala.concurrent.Future {
         bounded(graft.operators.IncrementalDedup.candidatePairs(banded,
-          aq, "doc_id", "text", numHashes = 32, bands = 8),
+          aq, "doc_id", "text", numHashes = 32, bands = 8,
+          maxRows = maxBlast),
           "amendment candidate pairs")(
           r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
       }(scala.concurrent.ExecutionContext.Implicits.global))
@@ -1797,10 +1805,10 @@ object PipelineQueries {
     // rIds put a 5M-id retraction with few S2 members over the tighter
     // maxStrBlast cap, a ~10× silent narrowing of the accepted-delta
     // contract that the sequential pre-r17 form did not have.
-    val removedS2F = Future { ids(s2ids.join(probe(rIds),
+    val removedS2F = Future { ids(s2ids.join(probe(s, rIds),
       Seq("doc_id"), "left_semi"), "retracted survivors") }
     val lostKeepersF = removedS2F.map { removedS2 => boundedStr(
-      qmeta.join(probe(removedS2), Seq("doc_id"), "left_semi")
+      qmeta.join(probe(s, removedS2), Seq("doc_id"), "left_semi")
         .select("digest", "doc_id"), "touched digests")(
       r => (r.getString(0), r.getLong(1))) }
     val removedS2 = Await.result(removedS2F, Duration.Inf)
@@ -1809,12 +1817,12 @@ object PipelineQueries {
     val touchedDigests =
       (lostKeepers.map(_._1) ++ aqRows.map(_._2)).distinct
     val atRestCand = boundedStr(
-      qmeta.join(broadcast(touchedDigests.toDF("digest")),
+      qmeta.join(probe(s, touchedDigests, "digest"),
           Seq("digest"), "left_semi")
         .select("digest", "doc_id"), "re-election candidates")(
         r => (r.getString(0), r.getLong(1)))
       .filter { case (_, id) => !rIds(id) }
-    val candS2 = ids(s2ids.join(probe(atRestCand.map(_._2)),
+    val candS2 = ids(s2ids.join(probe(s, atRestCand.map(_._2)),
       Seq("doc_id"), "left_semi"), "candidate S2 membership")
     val byDigest = (atRestCand.map { case (g, id) => (g, (id, false)) }
         ++ aqRows.map { case (id, g) => (g, (id, true)) })
@@ -1845,8 +1853,7 @@ object PipelineQueries {
     // bounded text verify (same collect, same cap, same raise)
     val changedS2 = removedS2 ++ stolen ++ resurrected ++ insKeepers
     val candPartnersF = Future { bounded(
-      pairs.join(broadcast(changedS2.toSeq.toDF("id1")), Seq("id1"),
-          "left_semi")
+      pairs.join(probe(s, changedS2, "id1"), Seq("id1"), "left_semi")
         .select(col("id2").as("doc_id")), "pair partners")(_.getLong(0)) }
 
     // fresh pair graph of the NEW content — candidates then verify:
@@ -1879,7 +1886,7 @@ object PipelineQueries {
           val atRestIds = remapped.flatMap { case (x, y) =>
             Seq(x, y).filterNot(inserted) }.distinct
           val sh = DedupQueries.shingled(
-              docs.join(probe(atRestIds), Seq("doc_id"), "left_semi")
+              docs.join(probe(s, atRestIds), Seq("doc_id"), "left_semi")
                 .select(col("doc_id"), col("text"))
                 .unionAll(aq.select(col("doc_id"), col("text"))), "sh")
             .select(col("doc_id"), array_distinct(col("sh")).as("tk"))
@@ -1928,20 +1935,19 @@ object PipelineQueries {
     //    |S3 ∩ atRestFresh| to at most |affected|, a set this call
     //    already holds on the driver — no blast-radius change.
     val culpritPairsF = Future { bounded(
-      pairs.join(broadcast(affected.toSeq.toDF("id2")), Seq("id2"),
-        "left_semi").select("id1", "id2"), "culprit pairs")(
+      pairs.join(probe(s, affected, "id2"), Seq("id2"), "left_semi")
+        .select("id1", "id2"), "culprit pairs")(
       r => (r.getLong(0), r.getLong(1))) }
     val toTestDf = pairs
-      .join(broadcast((affected -- rIds).toSeq.toDF("id2")),
-        Seq("id2"), "left_semi")
+      .join(probe(s, affected -- rIds, "id2"), Seq("id2"), "left_semi")
       .select(col("id1").as("doc_id"))
-      .join(probe(rIds), Seq("doc_id"), "left_anti")
-      .unionAll(probe(affected ++
+      .join(probe(s, rIds), Seq("doc_id"), "left_anti")
+      .unionAll(probe(s, affected ++
         newPairs.collect { case (a, b) if affected(b) => a }))
     val inS2OldF = Future { ids(s2ids.join(broadcast(toTestDf),
       Seq("doc_id"), "left_semi"), "S2 membership probe") }
     val oldTimersF = Future { ids(
-      s3ids.join(probe(affected -- inserted), Seq("doc_id"),
+      s3ids.join(probe(s, affected -- inserted), Seq("doc_id"),
         "left_semi"), "prior S3 members") }
     // a raise in one wave member aborts this call at ITS await — the
     // siblings' own failures (incl. their blast-radius raises) must
@@ -1971,19 +1977,19 @@ object PipelineQueries {
     val atRestNew = newcomers -- inserted
     val insNew = newcomers & inserted
     val contNew = ids(
-      docs.join(probe(atRestNew), Seq("doc_id"), "left_semi")
+      docs.join(probe(s, atRestNew), Seq("doc_id"), "left_semi")
         .select(col("doc_id"), col("text"))
-        .unionAll(aq.join(probe(insNew), Seq("doc_id"), "left_semi")
+        .unionAll(aq.join(probe(s, insNew), Seq("doc_id"), "left_semi")
           .select(col("doc_id"), col("text")))
       .select(col("doc_id"), explode(graft.functions.GraftFunctions
         .ngramHashes(lower(col("text")), 5)).as("ngh"))
       .join(benchGrams, Seq("ngh"), "left_semi")
       .select("doc_id").distinct(), "contaminated newcomers")
     val s4new = qmeta.select("doc_id", "lang", "n_tokens")
-      .join(probe(atRestNew -- contNew), Seq("doc_id"), "left_semi")
+      .join(probe(s, atRestNew -- contNew), Seq("doc_id"), "left_semi")
       .unionByName(aq.select("doc_id", "lang", "n_tokens")
-        .join(probe(insNew -- contNew), Seq("doc_id"), "left_semi"))
-    val s4keep = s4meta.join(probe(rIds ++ doomedNow ++ stolen),
+        .join(probe(s, insNew -- contNew), Seq("doc_id"), "left_semi"))
+    val s4keep = s4meta.join(probe(s, rIds ++ doomedNow ++ stolen),
       Seq("doc_id"), "left_anti")
     aq.unpersist()
     UpsertState(rIds, inserted, insKeepers, stolen, resurrected,
@@ -2005,9 +2011,15 @@ object PipelineQueries {
   }
 
   private[graft] object CorpusFrames {
-    /** The frames [[CorpusFrames.named]] laid out under `root`. */
-    def read(s: SparkSession, root: String): CorpusFrames = {
-      def at(name: String) = s.read.parquet(s"$root/$name")
+    /** The frames [[CorpusFrames.named]] laid out under `root`. With
+      * `like` (the frames just written there), each is read with its
+      * known schema, which skips the footer-inference job per frame. */
+    def read(s: SparkSession, root: String,
+        like: Option[CorpusFrames] = None): CorpusFrames = {
+      val schemas = like.map(_.named.map { case (n, df) => n -> df.schema }
+        .toMap)
+      def at(name: String) = schemas.fold(s.read)(m => s.read.schema(m(name)))
+        .parquet(s"$root/$name")
       CorpusFrames(at("qmeta"), at("s2ids"), at("s3ids"), at("s4meta"),
         at("sigindex"))
     }
@@ -2036,24 +2048,22 @@ object PipelineQueries {
     import graft.operators.IncrementalDedup
     val s = docs.sparkSession
     import s.implicits._
-    def probe(set: Iterable[Long]): DataFrame =
-      broadcast(set.toSeq.toDF("doc_id"))
     def sigsOf(df: DataFrame, ids: Set[Long]): DataFrame =
       IncrementalDedup.signatures(
-        df.join(probe(ids), Seq("doc_id"), "left_semi"), "doc_id", "text")
+        df.join(probe(s, ids), Seq("doc_id"), "left_semi"), "doc_id", "text")
     val aq = qualityGate(amended)
     CorpusFrames(
-      f.qmeta.join(probe(st.rIds), Seq("doc_id"), "left_anti")
+      f.qmeta.join(probe(s, st.rIds), Seq("doc_id"), "left_anti")
         .unionByName(aq.select(col("doc_id"), col("lang"),
           col("n_tokens"), sha2(col("text"), 256).as("digest"))),
-      f.s2ids.join(probe(st.rIds ++ st.stolen), Seq("doc_id"), "left_anti")
-        .unionAll(probe(st.resurrected ++ st.insKeepers)),
-      f.s3ids.join(probe(st.rIds ++ st.stolen ++ st.doomedNow ++
+      f.s2ids.join(probe(s, st.rIds ++ st.stolen), Seq("doc_id"), "left_anti")
+        .unionAll(probe(s, st.resurrected ++ st.insKeepers)),
+      f.s3ids.join(probe(s, st.rIds ++ st.stolen ++ st.doomedNow ++
           st.newcomers), Seq("doc_id"), "left_anti")
-        .unionAll(probe(st.newcomers)),
+        .unionAll(probe(s, st.newcomers)),
       st.s4keep.unionByName(st.s4new),
-      f.sigs.join(probe(st.rIds ++ st.stolen)
-          .withColumnRenamed("doc_id", "id"), Seq("id"), "left_anti")
+      f.sigs.join(probe(s, st.rIds ++ st.stolen, "id"), Seq("id"),
+          "left_anti")
         .unionAll(sigsOf(docs, st.resurrected))
         .unionAll(sigsOf(aq, st.insKeepers)))
   }
@@ -2141,15 +2151,14 @@ object PipelineQueries {
       amendments: DataFrame): DataFrame = {
     import s.implicits._
     val (st, s4meta) = corpusAmendStateFrom(s, d, amendments)
-    def probe(ids: Set[Long]) = broadcast(ids.toSeq.toDF("doc_id"))
     val inNew = (st.newcomers & st.inserted) -- st.contNew
     val amendedIn = inNew.toSeq.sorted
       .map(id => (id, "amended_in_corpus")).toDF("doc_id", "reason")
     val removedAmended = s4meta
-      .join(probe(st.rIds -- inNew), Seq("doc_id"), "left_semi")
+      .join(probe(s, st.rIds -- inNew), Seq("doc_id"), "left_semi")
       .select(col("doc_id"), lit("removed_amended").as("reason"))
     val removedDisplaced = s4meta
-      .join(probe((st.doomedNow ++ st.stolen) -- st.rIds),
+      .join(probe(s, (st.doomedNow ++ st.stolen) -- st.rIds),
         Seq("doc_id"), "left_semi")
       .select(col("doc_id"), lit("removed_displaced").as("reason"))
     val born = ((st.newcomers -- st.inserted) -- st.contNew).toSeq.sorted
@@ -2228,8 +2237,7 @@ object PipelineQueries {
     val st = corpusRetractState(Tables.documents(s, d), retracted,
       f.qmeta, f.s2ids, f.s3ids, f.s4meta, benchGrams, pairs)
     def removed(ids: Set[Long], reason: String) =
-      f.s4meta.join(broadcast(ids.toSeq.toDF("doc_id")), Seq("doc_id"),
-          "left_semi")
+      f.s4meta.join(probe(s, ids), Seq("doc_id"), "left_semi")
         .select(col("doc_id"), lit(reason).as("reason"))
     val born = (st.newcomers -- st.contNew).toSeq.sorted
       .map(id => (id, if (st.resurrected(id)) "resurrected_exact_twin"

@@ -144,7 +144,13 @@ object Layout {
           "scan with the residual filter, or keep file skipping in " +
           "a table-format manifest at this file count")
     if (keep.isEmpty) s.read.parquet(dataDir).filter(lit(false))
-    else s.read.parquet(keep.toIndexedSeq: _*)
+    // a sidecar names each part file by its path under the root that
+    // built it: resolve the file name under THIS root's data dir, so a
+    // moved or copied artifact root reads its own files
+    else s.read.parquet(keep.toIndexedSeq.map { f =>
+      val name = new org.apache.hadoop.fs.Path(new java.net.URI(f)).getName
+      s"$dataDir/$name"
+    }: _*)
   }
 
   /** Events with `user_id` in [lo, hi], read ONLY from files whose zone
@@ -153,8 +159,12 @@ object Layout {
     * lives by nature, bounded by [[maxPlannedFiles]] — and the residual
     * filter keeps exactness within the boundary files. */
   def zoneMapPrunedEvents(s: SparkSession, d: String, lo: Long,
-      hi: Long): DataFrame = {
-    val dir = clusteredEventsDir(s, d)
+      hi: Long): DataFrame =
+    zoneMapPrunedAt(s, clusteredEventsDir(s, d), lo, hi)
+
+  /** [[zoneMapPrunedEvents]] over the artifact root `dir`. */
+  private[graft] def zoneMapPrunedAt(s: SparkSession, dir: String,
+      lo: Long, hi: Long): DataFrame = {
     val keep = s.read.parquet(s"$dir/zonemap")
       .filter(col("mn") <= hi && col("mx") >= lo)
       .select("file").collect().map(_.getString(0))

@@ -952,7 +952,7 @@ object StreamOps {
     if (touched.isEmpty) return 0
     spark.read.parquet(store)
       .filter(col("part").isin(touched.toSeq.map(Long.box): _*))
-      .join(broadcast(touchIds.toSeq.toDF(idCol)),
+      .join(graft.queries.PipelineQueries.probe(spark, touchIds, idCol),
         Seq(idCol), "left_anti")
       .drop("part")
       .unionByName(addRows)
@@ -1070,37 +1070,38 @@ object StreamOps {
     val out = java.nio.file.Files.createTempDirectory("graft_scrud")
     // the live state generation, once a batch has committed
     var gen = Option.empty[java.nio.file.Path]
-    def probe(ids: Set[Long]): DataFrame =
-      broadcast(ids.toSeq.toDF("doc_id"))
     val DocStoreParts = 32
     val docsStore = s"$out/docstore"
+    // every store this run writes is read back with the schema it was
+    // written with: a parquet read without one runs a footer-inference
+    // job per store
+    val docsStored =
+      docs.withColumn("part", pmod(col("doc_id"), lit(DocStoreParts)))
     var folds = 0L
     if (compactEvery > 0)
       // one-time layout precondition (NOT fold cost): the folding
       // store keeps documents hash-partitioned so each fold's rewrite
       // prunes to the partitions its overlay touches
-      docs.withColumn("part", pmod(col("doc_id"), lit(DocStoreParts)))
-        .write.mode("overwrite").partitionBy("part").parquet(docsStore)
+      docsStored.write.mode("overwrite").partitionBy("part")
+        .parquet(docsStore)
     def foldOverlay(): Unit =
       if (everAmended.nonEmpty || pairsNew.nonEmpty) {
         val t0 = System.nanoTime()
         val touched = foldDocStore(spark, docsStore,
           s"$out/foldtmp$folds", everAmended, amendedRows,
           DocStoreParts)
-        docs = spark.read.parquet(docsStore)
+        docs = spark.read.schema(docsStored.schema).parquet(docsStore)
           .select("doc_id", "lang", "text")
         // the pair graph is id-pair metadata — fold = rewrite the
         // effective view (index-sized, the day-3 merge class)
         val pairsDir = s"$out/pairstore$folds"
-        staticPairs
-          .join(probe(everAmended).withColumnRenamed("doc_id", "id1"),
-            Seq("id1"), "left_anti")
-          .join(probe(everAmended).withColumnRenamed("doc_id", "id2"),
-            Seq("id2"), "left_anti")
+        val folded = staticPairs
+          .join(PQ.probe(spark, everAmended, "id1"), Seq("id1"), "left_anti")
+          .join(PQ.probe(spark, everAmended, "id2"), Seq("id2"), "left_anti")
           .unionByName(pairsNew.toDF("id1", "id2"))
-          .hint("rebalance")
-          .write.mode("overwrite").parquet(pairsDir)
-        staticPairs = swapHot(staticPairs, spark.read.parquet(pairsDir))
+        folded.hint("rebalance").write.mode("overwrite").parquet(pairsDir)
+        staticPairs = swapHot(staticPairs,
+          spark.read.schema(folded.schema).parquet(pairsDir))
         System.err.println(f"[stream-crud] fold ${folds + 1}: " +
           f"${everAmended.size} amended ids over $touched of " +
           f"$DocStoreParts doc partitions, ${pairsNew.size} fresh " +
@@ -1148,13 +1149,11 @@ object StreamOps {
             .limit(1).collect()
         }(scala.concurrent.ExecutionContext.Implicits.global)
         val docsCur = docs
-          .join(probe(everAmended), Seq("doc_id"), "left_anti")
+          .join(PQ.probe(spark, everAmended), Seq("doc_id"), "left_anti")
           .unionByName(amendedRows)
         val pairsEff = staticPairs
-          .join(probe(everAmended).withColumnRenamed("doc_id", "id1"),
-            Seq("id1"), "left_anti")
-          .join(probe(everAmended).withColumnRenamed("doc_id", "id2"),
-            Seq("id2"), "left_anti")
+          .join(PQ.probe(spark, everAmended, "id1"), Seq("id1"), "left_anti")
+          .join(PQ.probe(spark, everAmended, "id2"), Seq("id2"), "left_anti")
           .unionByName(pairsNew.toDF("id1", "id2"))
         val st = PQ.corpusUpsertState(docsCur, ids, batch, cur.qmeta,
           cur.s2ids, cur.s3ids, cur.s4meta, benchGrams, pairsEff,
@@ -1165,7 +1164,7 @@ object StreamOps {
         val tDelta = (System.nanoTime() - tB0) / 1e9
         val next = PQ.upsertRewrite(st, cur, batch, docsCur)
         val amendedN = amendedRows
-          .join(probe(st.rIds), Seq("doc_id"), "left_anti")
+          .join(PQ.probe(spark, st.rIds), Seq("doc_id"), "left_anti")
           .unionByName(batch)
         def remap(p: (Long, Long)): Option[(Long, Long)] = {
           def m(x: Long): Option[Long] =
@@ -1197,9 +1196,10 @@ object StreamOps {
             () => writeSnapshot(df, s"$base/$name", rebalance)
         } :+ (() => alsoPerBatch(ids, batchId)))
         cur.named.foreach(_._2.unpersist())
-        cur = PQ.CorpusFrames.read(spark, base.toString).map(_.cache())
+        cur = PQ.CorpusFrames.read(spark, base.toString, Some(next))
+          .map(_.cache())
         amendedRows = swapHot(amendedRows,
-          spark.read.parquet(s"$base/amended"))
+          spark.read.schema(amendedN.schema).parquet(s"$base/amended"))
         // nothing references the superseded generation once its
         // successor is hot (a retried batch rewrites its own dir)
         gen.filterNot(_ == base).foreach(deleteTree)

@@ -26,7 +26,8 @@ object GraftPlanBridge {
   }
 
   /** Late attach: append the strategies and rules `f` would inject at
-    * session build to the session's runtime `experimental` hooks. */
+    * session build to the session's runtime `experimental` hooks.
+    * Query-stage rules have no runtime hook, so they stay out. */
   def attach(f: SparkSessionExtensions => Unit, spark: SparkSession): Unit = {
     val (strategies, rules) = buildExtensionParts(f, spark)
     val cs = spark.asInstanceOf[classic.SparkSession]
@@ -41,4 +42,12 @@ object GraftPlanBridge {
   def optimizerRules(spark: SparkSession): Seq[Rule[LogicalPlan]] =
     spark.asInstanceOf[classic.SparkSession].sessionState.optimizer
       .batches.flatMap(_.rules)
+
+  /** The query-stage prep rules the session's adaptive planner runs
+    * beyond Spark's own (fixed when the session state is built; a late
+    * attach cannot add to them). */
+  def queryStagePrepRules(spark: SparkSession)
+      : Seq[Rule[org.apache.spark.sql.execution.SparkPlan]] =
+    spark.asInstanceOf[classic.SparkSession].sessionState
+      .adaptiveRulesHolder.queryStagePrepRules
 }

@@ -27,6 +27,10 @@ class CollectSiteLintSpec extends AnyFunSuite {
       "limit(1) missing-payload probe (loud raise on a lost event)"),
     "EmbedStats.scala" -> (1, "d(d+1)/2 covariance cells with " +
       "d <= maxDim (128) raised loudly in covariance()"),
+    "IncrementalDedup.scala" -> (2, "candidatePairs: the batch's band " +
+      "keys collect through limit(maxRows + 1) + require; the index " +
+      "pass returns one row per partition and batch key, each holding " +
+      "at most maxBucket ids (bound by construction)"),
     "BpeTrain.scala" -> (1, "limit(1) — single best-pair row per " +
       "merge round"),
     "Mixing.scala" -> (1, "limit(maxGroups + 1) + require in " +

@@ -28,6 +28,12 @@ class ExtensionsSpec extends SparkSpec {
       .exists(_.isInstanceOf[graft.plans.RewriteAggregateToSummary]))
   }
 
+  test("the session's query-stage prep rules carry the local " +
+      "broadcast rule") {
+    assert(GraftPlanBridge.queryStagePrepRules(fresh)
+      .contains(org.apache.spark.sql.JobFreeLocalBroadcast))
+  }
+
   test("an extension-only session resolves every table function") {
     val missing = GraftFunctions.builders.keys.toSeq.sorted
       .filterNot(fresh.catalog.functionExists)

@@ -55,6 +55,32 @@ class ZoneMapSpec extends SparkSpec {
       s"probe touched $touched of $total files - no skipping")
   }
 
+  test("a copied artifact root prunes from its own data files") {
+    import java.nio.file.{Files, Path}
+    def copyTree(from: Path, to: Path): Unit = {
+      val walk = Files.walk(from)
+      try walk.forEach { p =>
+        Files.copy(p, to.resolve(from.relativize(p)))
+        ()
+      } finally walk.close()
+    }
+    val root = java.nio.file.Paths.get(Layout.clusteredEventsDir(spark, sf))
+    val copy = Files.createTempDirectory("graft_zonemap").resolve("root")
+    copyTree(root, copy)
+    // the original's part files go away while the copy is read (and
+    // come back after, for the specs sharing the cached artifact)
+    val aside = root.resolveSibling(s"${root.getFileName}.aside")
+    Files.move(root.resolve("data"), aside)
+    try {
+      val got = Layout.zoneMapPrunedAt(spark, copy.toString, 3L, 9L)
+        .select("event_id")
+      val want = Tables.events(spark, sf)
+        .filter(col("user_id").between(3L, 9L)).select("event_id")
+      assert(want.count() > 0)
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+    } finally Files.move(aside, root.resolve("data"))
+  }
+
   test("planned-file cap raises loudly past maxPlannedFiles " +
       "(round-13: a non-selective prune must not materialize an " +
       "unbounded driver-side path list)") {
