@@ -87,6 +87,8 @@ object GraftFunctions {
       intArg(es(1), "ngram_hashes_gen"))),
     "ngram_rep_stats" -> (es => NgramRepStats(es(0),
       intArg(es(1), "ngram_rep_stats"))),
+    "word_ngrams" -> (es => WordNgrams(es(0),
+      intArg(es(1), "word_ngrams"))),
     "purge_positions" -> (es => PurgePositions(es(0), es(1))),
     "rand_project" -> (es => SignedProject(es(0), es(1),
       intArg(es(2), "rand_project"))),
@@ -340,6 +342,11 @@ object GraftFunctions {
   /** [total, distinct, maxRun] of a doc's word n-grams in one pass. */
   def ngramRepStats(text: Column, n: Int): Column =
     call_function("ngram_rep_stats", text,
+      org.apache.spark.sql.functions.lit(n))
+  /** Space-joined n-grams of consecutive tokens, in order, duplicates
+    * kept — one kernel pass over an already tokenized array. */
+  def wordNgrams(toks: Column, n: Int): Column =
+    call_function("word_ngrams", toks,
       org.apache.spark.sql.functions.lit(n))
   /** Tokens minus the SORTED 0-based positions, one linear merge. */
   def purgePositions(toks: Column, sortedPos: Column): Column =

@@ -130,6 +130,49 @@ object TextHashExpressions {
       maxRun.toLong))
   }
 
+  /** [[WordNgrams]] kernel: the `n`-grams of consecutive tokens, each
+    * joined by one space, in order, duplicates kept — element for
+    * element `concat_ws(' ', slice(toks, i, n))` for i = 1 .. size−n+1
+    * (a null token is skipped inside its n-grams, as `concat_ws` skips
+    * it); empty when fewer than `n` tokens. Each token is read from the
+    * array the caller tokenized once, so a doc costs O(tokens · n). */
+  def wordNgramsOf(toks: ArrayData, n: Int): ArrayData = {
+    val k = toks.numElements()
+    if (k < n) return new GenericArrayData(Array.empty[AnyRef])
+    val ts = new Array[org.apache.spark.unsafe.types.UTF8String](k)
+    var i = 0
+    while (i < k) {
+      if (!toks.isNullAt(i)) ts(i) = toks.getUTF8String(i)
+      i += 1
+    }
+    val out = new Array[AnyRef](k - n + 1)
+    var g = 0
+    while (g < out.length) {
+      // bytes of the window's non-null tokens plus one separator
+      // between each adjacent pair of them
+      var len = -1; var j = g
+      while (j < g + n) {
+        if (ts(j) != null) len += ts(j).numBytes + 1
+        j += 1
+      }
+      val buf = new Array[Byte](math.max(len, 0))
+      var p = 0; var sep = false; j = g
+      while (j < g + n) {
+        val t = ts(j)
+        if (t != null) {
+          if (sep) { buf(p) = 0x20; p += 1 }
+          t.writeToMemory(buf,
+            org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET + p)
+          p += t.numBytes; sep = true
+        }
+        j += 1
+      }
+      out(g) = org.apache.spark.unsafe.types.UTF8String.fromBytes(buf)
+      g += 1
+    }
+    new GenericArrayData(out)
+  }
+
   /** [[PurgePositions]] kernel: drop the tokens at the given SORTED
     * 0-based positions in one two-pointer merge — O(tokens + positions)
     * per doc, versus the O(tokens × positions) of filtering each token
@@ -644,6 +687,45 @@ case class NgramRepStats(child: Expression, n: Int) extends UnaryExpression {
     nullSafeCodeGen(ctx, ev, c =>
       s"${ev.value} = graft.functions.TextHashExpressions" +
         s".ngramRepStatsOf($c, $n);")
+
+  override protected def withNewChildInternal(c: Expression): Expression =
+    copy(child = c)
+}
+
+/** word_ngrams(tokens, n) -> array<string> — the n-grams of consecutive
+  * tokens, each joined by one space, in order, duplicates kept (see
+  * [[TextHashExpressions.wordNgramsOf]]). The shingling kernel of
+  * [[graft.queries.DedupQueries.shingled]], [[graft.operators.Dedup
+  * .shingles]] and [[graft.operators.Decontam.ngrams]]: the caller
+  * tokenizes once and hands the array over, where the `transform(
+  * sequence(…), i -> concat_ws(' ', slice(toks, i, n)))` form lets
+  * Catalyst inline the tokenizer into the lambda and re-split the text
+  * once per n-gram. */
+case class WordNgrams(child: Expression, n: Int) extends UnaryExpression {
+  require(n >= 1, "n must be positive")
+  override def prettyName: String = "word_ngrams"
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+
+  override def checkInputDataTypes()
+      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    child.dataType match {
+      case ArrayType(StringType, _) =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+      case t =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+          s"word_ngrams expects array<string>, got ${t.catalogString}")
+    }
+
+  override def nullSafeEval(v: Any): Any =
+    TextHashExpressions.wordNgramsOf(v.asInstanceOf[ArrayData], n)
+
+  override protected def doGenCode(
+      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
+      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
+      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = graft.functions.TextHashExpressions" +
+        s".wordNgramsOf($c, $n);")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)

@@ -21,12 +21,13 @@ object Decontam {
 
   /** Distinct word n-grams of a text column; single-space tokenization so
     * the DuckDB oracle (`string_split`) matches exactly. Documents shorter
-    * than `n` tokens contribute nothing. */
+    * than `n` tokens contribute nothing. The text is split once and the
+    * n-grams come from one [[graft.functions.WordNgrams]] pass over that
+    * array. */
   def ngrams(text: Column, n: Int): Column = {
     val toks = split(lower(text), " ")
     array_distinct(when(size(toks) >= n,
-      transform(sequence(lit(1), size(toks) - n + 1),
-        i => concat_ws(" ", slice(toks, i, lit(n)))))
+      graft.functions.GraftFunctions.wordNgrams(toks, n))
       .otherwise(array().cast("array<string>")))
   }
 

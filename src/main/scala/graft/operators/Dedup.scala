@@ -37,12 +37,12 @@ object Dedup {
 
   /** Distinct word `n`-gram shingles of a text column (lower-cased,
     * whitespace-tokenized). Falls back to the whole text when shorter than
-    * `n` tokens. */
+    * `n` tokens. The text is split once and the n-grams come from one
+    * [[graft.functions.WordNgrams]] pass over that array. */
   def shingles(text: Column, n: Int = 3): Column = {
     val toks = split(lower(text), "\\s+")
-    val grams = transform(sequence(lit(0), size(toks) - n),
-      i => concat_ws(" ", slice(toks, i + 1, lit(n))))
-    array_distinct(when(size(toks) < n, array(lower(text))).otherwise(grams))
+    array_distinct(when(size(toks) < n, array(lower(text)))
+      .otherwise(graft.functions.GraftFunctions.wordNgrams(toks, n)))
   }
 
   /** Estimated Jaccard similarity from two MinHash signatures. */

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.GraftFunctions
 import graft.operators.{AnnSearch, Dedup, Multimodal}
 import graft.sources.{Artifacts, Tables}
 
@@ -392,25 +393,24 @@ object DedupQueries {
     shingled(Tables.documents(s, d), outCol)
 
   /** Word-trigram shingling of any (doc_id, text) frame — the shared
-    * recipe of the set-similarity gates. */
+    * recipe of the set-similarity gates: lower-cased single-space
+    * tokens with empty ones dropped, every trigram in order with
+    * duplicates kept, and an empty set below 3 tokens.
+    *
+    * The text is split once per row and the one
+    * [[graft.functions.GraftFunctions.wordNgrams]] kernel call reads
+    * that array. A `transform(sequence(…), i -> concat_ws(…,
+    * element_at(tk, i), …))` form is quadratic however it is fenced:
+    * Catalyst inlines the tokenizer into the lambda (CollapseProject),
+    * and the `size(shingles) > 0` filter that InferFiltersFromGenerate
+    * derives for a downstream `explode` is pushed below any exchange
+    * with `shingles` expanded, re-splitting the text several times per
+    * shingle position. */
   def shingled(docs: DataFrame, outCol: String): DataFrame = {
     val tk = filter(split(lower(col("text")), " "), t => length(t) > 0)
-    docs
-      .select(col("doc_id"), tk.as("tk"))
-      // materialization barrier: without it CollapseProject inlines the
-      // tokenize expression into the shingle lambda's element_at calls,
-      // re-splitting the text ~3× PER SHINGLE (measured 8 s on 5000
-      // docs); behind the exchange the array is stored once and
-      // element_at is a real O(1) access
-      .repartition(col("doc_id"))
-      .select(col("doc_id"),
-        // sequence(1, n-2) flips descending when n < 3 — guard short
-        // docs to an empty set (the segmentByTokens empty-doc pattern)
-        when(size(col("tk")) < 3, array().cast("array<string>"))
-          .otherwise(transform(sequence(lit(1), size(col("tk")) - 2),
-            i => concat_ws(" ", element_at(col("tk"), i),
-              element_at(col("tk"), i + 1),
-              element_at(col("tk"), i + 2)))).as(outCol))
+    docs.select(col("doc_id"),
+      when(size(tk) < 3, array().cast("array<string>"))
+        .otherwise(GraftFunctions.wordNgrams(tk, 3)).as(outCol))
   }
 
   /** Build-once/read-many verified pair graph shared by the two

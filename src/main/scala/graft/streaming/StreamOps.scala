@@ -3,6 +3,7 @@ package graft.streaming
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -976,6 +977,15 @@ object StreamOps {
       finally walk.close()
     }
 
+  /** `df` cached, unless its optimized plan is already an empty local
+    * relation: caching that would only hide the emptiness from the
+    * optimizer's empty-relation propagation. */
+  private[streaming] def cacheUnlessPlannedEmpty(df: DataFrame): DataFrame =
+    df.queryExecution.optimizedPlan match {
+      case l: LocalRelation if l.data.isEmpty => df
+      case _ => df.cache()
+    }
+
   /** THE corpus CRUD stream driver — [[streamRetractFrom]],
     * [[streamRetractFull]], [[streamAmendRun]] and [[streamAmendFrom]]
     * are thin callers. One streaming query, one deterministic state
@@ -1045,8 +1055,10 @@ object StreamOps {
     // rewrite that touches the batch's text. Materialize it once per
     // run (r17 optimization; guide §5 "caching is worth it when a
     // DataFrame is reused and recomputing is more expensive than the
-    // memory pressure" — here the memory is delta-sized).
-    val store = payloads.cache()
+    // memory pressure" — here the memory is delta-sized). A retraction
+    // run's payload (`noPayload`, a `limit(0)`) stays uncached, so the
+    // optimizer drops the store probe and the payload joins outright.
+    val store = cacheUnlessPlannedEmpty(payloads)
     // r17 optimization: each micro-batch's delta probes scan the
     // at-rest membership frames ~3× and the frame rewrites read them
     // again — keep the CURRENT state generation hot between batches
@@ -1123,10 +1135,9 @@ object StreamOps {
         // jobs (rIds collect, quality gate, fresh-pair text fetch, the
         // qmeta/sigs/amended frame rewrites) — cache it for the batch's
         // lifetime (r17 optimization), released before the commit ends
-        val batch = store
+        val batch = cacheUnlessPlannedEmpty(store
           .join(upserts, Seq("doc_id"), "left_semi")
-          .select("doc_id", "lang", "text")
-          .cache()
+          .select("doc_id", "lang", "text"))
         // released in the finally below — a per-batch raise (e.g. the
         // event-contract require) must not leak the cached batch
         try {

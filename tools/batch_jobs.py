@@ -2,6 +2,7 @@
 """Per-micro-batch job accounting from a Spark event log.
 
     python3 tools/batch_jobs.py <event log file or directory> [--sql]
+    python3 tools/batch_jobs.py <event log file or directory> --stages N
 
 For every streaming micro-batch in the log (one `QueryProgressEvent` each)
 it prints the batch's trigger time, the jobs submitted inside it, their
@@ -18,6 +19,14 @@ wall ms and the top operators of the physical plan (a micro-batch's
 executions all carry the stream's call site, so the plan is what names
 them). `--match REGEX` keeps only the executions whose physical plan
 matches, e.g. `--match minhash_text` for the near-dup candidate probe.
+
+With `--stages N` it prints instead the N longest stages of each
+application, micro-batch or not (longest by wall time, submission to
+completion): stage and SQL execution ids, tasks, wall, task run and task
+CPU seconds, records in (scan plus shuffle read) and out (write plus
+shuffle write), shuffle bytes read and written, and the top operators of
+the owning SQL execution. This is where a whole run's time goes, e.g. a
+scan whose task CPU dwarfs its records.
 
 A directory may be one event log (`eventlog_v2_*`, rolled `events_*`
 files) or a directory of logs; every application with micro-batches is
@@ -101,8 +110,28 @@ def busy_ms(intervals):
     return total
 
 
+def add_task(stage, m):
+    """Fold one task's `Task Metrics` into its stage's totals."""
+    sr = m.get("Shuffle Read Metrics") or {}
+    sw = m.get("Shuffle Write Metrics") or {}
+    for k, v in (
+            ("tasks", 1),
+            ("run_ms", m.get("Executor Run Time", 0)),
+            ("cpu_ns", m.get("Executor CPU Time", 0)),
+            ("rec_in", (m.get("Input Metrics") or {}).get("Records Read", 0)
+             + sr.get("Total Records Read", 0)),
+            ("rec_out",
+             (m.get("Output Metrics") or {}).get("Records Written", 0)
+             + sw.get("Shuffle Records Written", 0)),
+            ("sh_read", sr.get("Remote Bytes Read", 0)
+             + sr.get("Local Bytes Read", 0)),
+            ("sh_write", sw.get("Shuffle Bytes Written", 0))):
+        stage[k] = stage.get(k, 0) + v
+
+
 def read_app(files):
-    jobs, stage_job, tasks, sqls, batches, queries = {}, {}, {}, {}, [], {}
+    jobs, stage_job, sqls, batches, queries = {}, {}, {}, [], {}
+    stages = {}
     for f in files:
         with open(f) as fh:
             for line in fh:
@@ -120,7 +149,13 @@ def read_app(files):
                 elif ev == "SparkListenerJobEnd":
                     jobs[e["Job ID"]]["end"] = e["Completion Time"]
                 elif ev == "SparkListenerTaskEnd":
-                    tasks[e["Stage ID"]] = tasks.get(e["Stage ID"], 0) + 1
+                    add_task(stages.setdefault(e["Stage ID"], {}),
+                             e.get("Task Metrics") or {})
+                elif ev == "SparkListenerStageCompleted":
+                    i = e["Stage Info"]
+                    stages.setdefault(i["Stage ID"], {}).update(
+                        submit=i.get("Submission Time"),
+                        done=i.get("Completion Time"))
                 elif ev.endswith("SQLExecutionStart"):
                     plan = e.get("physicalPlanDescription", "")
                     sqls[e["executionId"]] = {
@@ -140,12 +175,35 @@ def read_app(files):
                         "t0": t0,
                         "t1": t0 + p["durationMs"].get("triggerExecution", 0)})
     for s, j in stage_job.items():
-        jobs[j]["tasks"] += tasks.get(s, 0)
-    return jobs, sqls, batches
+        jobs[j]["tasks"] += stages.get(s, {}).get("tasks", 0)
+        stages.setdefault(s, {})["sql"] = jobs[j]["sql"]
+    return jobs, sqls, batches, stages
 
 
-def report(files, show_sql, match):
-    jobs, sqls, batches = read_app(files)
+def report_stages(stages, sqls, n):
+    def wall(st):
+        return (st.get("done") or 0) - (st.get("submit") or 0)
+    print(f"{'stage':>6} {'sql':>5} {'tasks':>5} {'wall_s':>7} {'run_s':>7} "
+          f"{'cpu_s':>7} {'rec_in':>9} {'rec_out':>9} {'sh_read':>10} "
+          f"{'sh_write':>10}  sql plan")
+    for sid, st in sorted(stages.items(), key=lambda kv: -wall(kv[1]))[:n]:
+        sql = st.get("sql")
+        print(f"{sid:>6} {sql if sql is not None else '-':>5} "
+              f"{st.get('tasks', 0):>5} {wall(st) / 1e3:7.2f} "
+              f"{st.get('run_ms', 0) / 1e3:7.2f} "
+              f"{st.get('cpu_ns', 0) / 1e9:7.2f} {st.get('rec_in', 0):>9} "
+              f"{st.get('rec_out', 0):>9} {st.get('sh_read', 0):>10} "
+              f"{st.get('sh_write', 0):>10}  "
+              f"{sqls.get(sql, {}).get('top', '(no SQL execution)')}")
+
+
+def report(files, show_sql, match, top_stages):
+    jobs, sqls, batches, stages = read_app(files)
+    if top_stages:
+        if stages:
+            print(f"== {os.path.dirname(files[0]) or files[0]}")
+            report_stages(stages, sqls, top_stages)
+        return
     if not batches:
         return
     print(f"== {os.path.dirname(files[0]) or files[0]}")
@@ -185,12 +243,14 @@ def main():
                     help="also list each batch's SQL executions")
     ap.add_argument("--match", metavar="REGEX",
                     help="with --sql, only executions whose plan matches")
+    ap.add_argument("--stages", metavar="N", type=int,
+                    help="instead, each application's N longest stages")
     args = ap.parse_args()
     apps = log_files(args.path)
     if not apps:
         sys.exit(f"no event log under {args.path}")
     for files in apps:
-        report(files, args.sql, args.match)
+        report(files, args.sql, args.match, args.stages)
 
 
 if __name__ == "__main__":
