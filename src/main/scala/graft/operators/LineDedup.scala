@@ -94,12 +94,14 @@ object LineDedup {
     // empty doc would segment into one empty line
     val tk = filter(split(lower(col(textCol)), " "),
       t => length(t) > 0)
-    // sequence(0, n-1) flips descending when n < 1 — guard empty docs
-    df.withColumn(linesCol,
-      when(size(tk) === 0, array().cast("array<string>"))
-        .otherwise(transform(
-          sequence(lit(0),
-            ceil(size(tk) / lit(width.toDouble)).cast("int") - 1),
-          i => array_join(slice(tk, i * width + 1, lit(width)), " "))))
+    // the tokens are one column, handed to the lambda as its element
+    // (array_repeat): a lambda that read them from outside would get the
+    // tokenizer inlined into its body and re-split the text per window
+    df.withColumn("__tk", tk)
+      .withColumn(linesCol, transform(
+        array_repeat(col("__tk"),
+          ceil(size(col("__tk")) / lit(width.toDouble)).cast("int")),
+        (t, i) => array_join(slice(t, i * width + 1, lit(width)), " ")))
+      .drop("__tk")
   }
 }

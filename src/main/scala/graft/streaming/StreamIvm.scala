@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.{FileAlreadyExistsException, Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Streaming incremental view maintenance: a `foreachBatch` sink that
@@ -13,10 +11,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * per-group distinct counts at any commit point without ever
   * rescanning the base stream.
   *
-  * Commit protocol: [[StreamUpsert]]'s versioned-marker discipline —
-  * batch N reads the latest committed `state_V`, folds the batch,
-  * writes `state_N`, then creates `_committed_N` as the atomic commit
-  * point; a checkpoint-replayed batch finds its marker and skips, so
+  * Commit protocol: [[StreamUpsert]]'s versioned form of [[EosSink]]'s
+  * — batch N reads the latest committed `state_V`, folds the batch,
+  * writes `state_N` in one job ([[EosSink.writeParquet]]), then creates
+  * `_committed_N` as the only commit point ([[EosSink.commitOnce]]); a
+  * checkpoint-replayed batch finds its marker and skips, so
   * effects are exactly-once. Per-batch cost is the touched-rows
   * contract: the state scan + an O(|Δ|) fold (broadcast delta keys;
   * the untouched majority passes map-only), never a state-wide
@@ -29,24 +28,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 final class StreamIvm(baseDir: String, groupCols: Seq[String],
     valueCol: String, opCol: String) extends Serializable {
 
-  private def marker(batchId: Long) =
-    Paths.get(s"$baseDir/_committed_$batchId")
-
-  private def committedVersions(): Seq[Long] = {
-    val dir = Paths.get(baseDir)
-    if (!Files.isDirectory(dir)) return Seq.empty
-    val stream = Files.list(dir)
-    try {
-      import scala.jdk.CollectionConverters._
-      stream.iterator().asScala.map(_.getFileName.toString)
-        .filter(_.startsWith("_committed_"))
-        .map(_.stripPrefix("_committed_").toLong).toSeq.sorted
-    } finally stream.close()
-  }
-
   /** The latest committed multiplicity state (None before batch 0). */
   def current(spark: SparkSession): Option[DataFrame] =
-    committedVersions().lastOption.map(v =>
+    EosSink.committedBatchIds(baseDir).lastOption.map(v =>
       spark.read.parquet(s"$baseDir/state_$v"))
 
   /** Exact per-group distinct counts off the latest committed state. */
@@ -55,18 +39,14 @@ final class StreamIvm(baseDir: String, groupCols: Seq[String],
       graft.operators.IncrementalAgg.distinctCounts(_, groupCols))
 
   /** foreachBatch body: `writer.foreachBatch(sink.write _)`. */
-  def write(batch: DataFrame, batchId: Long): Unit = {
-    if (Files.exists(marker(batchId))) return // replayed — exactly-once
-    Files.createDirectories(Paths.get(baseDir))
-    val spark = batch.sparkSession
-    val next = current(spark) match {
-      case Some(st) => graft.operators.IncrementalAgg
-        .applyDistinctDelta(st, batch, groupCols, valueCol, opCol)
-      case None => graft.operators.IncrementalAgg
-        .distinctState(batch, groupCols, valueCol, Some(opCol))
+  def write(batch: DataFrame, batchId: Long): Unit =
+    EosSink.commitOnce(baseDir, batchId) {
+      val next = current(batch.sparkSession) match {
+        case Some(st) => graft.operators.IncrementalAgg
+          .applyDistinctDelta(st, batch, groupCols, valueCol, opCol)
+        case None => graft.operators.IncrementalAgg
+          .distinctState(batch, groupCols, valueCol, Some(opCol))
+      }
+      EosSink.writeParquet(next, s"$baseDir/state_$batchId")
     }
-    next.write.mode("overwrite").parquet(s"$baseDir/state_$batchId")
-    try Files.createFile(marker(batchId))
-    catch { case _: FileAlreadyExistsException => () } // benign race
-  }
 }

@@ -969,7 +969,7 @@ object StreamOps {
   }
 
   /** Delete `p` and everything under it, if it exists. */
-  private def deleteTree(p: java.nio.file.Path): Unit =
+  private[streaming] def deleteTree(p: java.nio.file.Path): Unit =
     if (java.nio.file.Files.exists(p)) {
       val walk = java.nio.file.Files.walk(p)
       try walk.sorted(java.util.Comparator.reverseOrder())

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.{FileAlreadyExistsException, Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -11,10 +9,11 @@ import org.apache.spark.sql.functions._
   * [[graft.operators.CorpusDiff.merge]] computes one step of, kept
   * current by a stream.
   *
-  * Commit protocol ([[EosSink]]'s marker discipline, versioned): batch N
-  * reads the LATEST committed snapshot version, merges the batch's
-  * deltas, writes `snapshot_N`, then creates the `_committed_N` marker
-  * as the atomic commit point. A checkpoint-replayed batch finds its
+  * Commit protocol ([[EosSink]]'s, versioned): batch N reads the
+  * LATEST committed snapshot version, merges the batch's deltas, writes
+  * `snapshot_N` in one job ([[EosSink.writeParquet]]), then creates the
+  * `_committed_N` marker as the only commit point
+  * ([[EosSink.commitOnce]]). A checkpoint-replayed batch finds its
   * marker and skips — exactly-once effects without a transactional
   * store. Delta batches apply in batchId order because microbatches are
   * strictly sequential (the reference's one-txn-per-batch ordering,
@@ -32,28 +31,13 @@ import org.apache.spark.sql.functions._
 final class StreamUpsert(baseDir: String, idCol: String,
     deleteCol: String) extends Serializable {
 
-  private def marker(batchId: Long) =
-    Paths.get(s"$baseDir/_committed_$batchId")
-
-  private def committedVersions(): Seq[Long] = {
-    val dir = Paths.get(baseDir)
-    if (!Files.isDirectory(dir)) return Seq.empty
-    val stream = Files.list(dir)
-    try {
-      import scala.jdk.CollectionConverters._
-      stream.iterator().asScala.map(_.getFileName.toString)
-        .filter(_.startsWith("_committed_"))
-        .map(_.stripPrefix("_committed_").toLong).toSeq.sorted
-    } finally stream.close()
-  }
-
   /** The latest committed snapshot (empty when none committed yet). */
   def current(spark: SparkSession): Option[DataFrame] =
-    committedVersions().lastOption.map(v =>
+    versions().lastOption.map(v =>
       spark.read.parquet(s"$baseDir/snapshot_$v"))
 
   /** All committed versions, ascending — the time-travel axis. */
-  def versions(): Seq[Long] = committedVersions()
+  def versions(): Seq[Long] = EosSink.committedBatchIds(baseDir)
 
   /** Snapshot AS OF a committed version (time travel): every committed
     * `snapshot_V` is immutable once its marker exists, so historical
@@ -61,28 +45,25 @@ final class StreamUpsert(baseDir: String, idCol: String,
     * contract falls out of the marker protocol for free. Loud on an
     * uncommitted version rather than serving a half-written write. */
   def at(spark: SparkSession, version: Long): DataFrame = {
-    require(committedVersions().contains(version),
+    require(versions().contains(version),
       s"version $version is not committed " +
-        s"(committed: ${committedVersions().mkString(",")})")
+        s"(committed: ${versions().mkString(",")})")
     spark.read.parquet(s"$baseDir/snapshot_$version")
   }
 
   /** foreachBatch body: `writer.foreachBatch(sink.write _)`. */
-  def write(batch: DataFrame, batchId: Long): Unit = {
-    if (Files.exists(marker(batchId))) return // replayed — exactly-once
-    Files.createDirectories(Paths.get(baseDir))
-    val spark = batch.sparkSession
-    val upserts = batch.filter(!col(deleteCol)).drop(deleteCol)
-    val deletes = batch.filter(col(deleteCol)).drop(deleteCol)
-    val merged = current(spark) match {
-      case Some(snap) =>
-        graft.operators.CorpusDiff.merge(snap, upserts, deletes, idCol)
-      case None =>
-        graft.operators.CorpusDiff.merge(
-          upserts.limit(0), upserts, deletes, idCol)
+  def write(batch: DataFrame, batchId: Long): Unit =
+    EosSink.commitOnce(baseDir, batchId) {
+      val spark = batch.sparkSession
+      val upserts = batch.filter(!col(deleteCol)).drop(deleteCol)
+      val deletes = batch.filter(col(deleteCol)).drop(deleteCol)
+      val merged = current(spark) match {
+        case Some(snap) =>
+          graft.operators.CorpusDiff.merge(snap, upserts, deletes, idCol)
+        case None =>
+          graft.operators.CorpusDiff.merge(
+            upserts.limit(0), upserts, deletes, idCol)
+      }
+      EosSink.writeParquet(merged, s"$baseDir/snapshot_$batchId")
     }
-    merged.write.mode("overwrite").parquet(s"$baseDir/snapshot_$batchId")
-    try Files.createFile(marker(batchId))
-    catch { case _: FileAlreadyExistsException => () } // benign race
-  }
 }

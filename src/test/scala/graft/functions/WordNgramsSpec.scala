@@ -5,15 +5,16 @@ import org.apache.spark.sql.catalyst.expressions.{LambdaFunction, StringSplit}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.operators.{Decontam, Dedup, SetSimJoin}
+import graft.operators.{Decontam, Dedup, LineDedup, SetSimJoin}
 import graft.queries.DedupQueries
 
-/** The `word_ngrams` kernel and the three shingling helpers built on it
-  * (`DedupQueries.shingled`, `Dedup.shingles`, `Decontam.ngrams`). Each
+/** The `word_ngrams` kernel, the three shingling helpers built on it
+  * (`DedupQueries.shingled`, `Dedup.shingles`, `Decontam.ngrams`) and
+  * the token-window segmenter (`LineDedup.segmentByTokens`). Each
   * helper must return exactly the arrays of the higher-order-function
   * form it replaced, kept below verbatim as the reference, and none of
   * their plans may leave the tokenizer inside a lambda body, where it
-  * runs once per n-gram. */
+  * runs once per n-gram or window. */
 class WordNgramsSpec extends SparkSpec {
 
   import spark.implicits._
@@ -47,6 +48,18 @@ class WordNgramsSpec extends SparkSpec {
       transform(sequence(lit(1), size(toks) - n + 1),
         i => concat_ws(" ", slice(toks, i, lit(n)))))
       .otherwise(array().cast("array<string>")))
+  }
+
+  /** The former `LineDedup.segmentByTokens`, verbatim. */
+  private def refSegmented(df: DataFrame, width: Int): DataFrame = {
+    val tk = filter(split(lower(col("text")), " "),
+      t => length(t) > 0)
+    df.withColumn("lines",
+      when(size(tk) === 0, array().cast("array<string>"))
+        .otherwise(transform(
+          sequence(lit(0),
+            ceil(size(tk) / lit(width.toDouble)).cast("int") - 1),
+          i => array_join(slice(tk, i * width + 1, lit(width)), " "))))
   }
 
   private val texts: Seq[(Long, String)] = Seq(
@@ -114,6 +127,21 @@ class WordNgramsSpec extends SparkSpec {
     assert(three(11L) === Seq("a b c", "b c "))
   }
 
+  test("LineDedup.segmentByTokens equals the former sequence form " +
+      "(single-space tokens, ragged tail, empty docs segment to [])") {
+    for ((path, d) <- bothPaths; w <- Seq(1, 2, 3, 5)) {
+      val got = rows(LineDedup.segmentByTokens(d, "text", "lines", w)
+        .select("doc_id", "lines"))
+      assert(got === rows(refSegmented(d, w).select("doc_id", "lines")),
+        s"$path w=$w")
+    }
+    val two = rows(LineDedup.segmentByTokens(docs, "text", "lines", 2)
+      .select("doc_id", "lines"))
+    assert(two(5L) === Seq("a b", "c d", "e"))
+    assert(two(8L) === Seq("a b", "c d"), "empty tokens drop")
+    assert(two(1L).isEmpty && two(14L).isEmpty)
+  }
+
   test("word_ngrams skips null tokens as concat_ws does, keeps " +
       "duplicates, is empty below n and null for a null array") {
     val arrs = Seq(
@@ -172,7 +200,14 @@ class WordNgramsSpec extends SparkSpec {
       "Decontam.ngrams" -> corpus.select(col("doc_id"),
         explode(Decontam.ngrams(col("text"), 3))),
       "Decontam.overlap" -> Decontam.overlap(corpus,
-        corpus.filter(col("doc_id") < 5), "doc_id", "text", 3))
+        corpus.filter(col("doc_id") < 5), "doc_id", "text", 3),
+      "segmentByTokens" -> LineDedup.segmentByTokens(corpus, "text",
+        "lines", 10),
+      "segmentByTokens(exploded)" -> LineDedup.segmentByTokens(corpus,
+        "text", "lines", 10).select(col("doc_id"), explode(col("lines"))),
+      "removeDupLines(segmentByTokens)" -> LineDedup.removeDupLines(
+        LineDedup.segmentByTokens(corpus, "text", "lines", 10),
+        "doc_id", "lines"))
     val offenders = plans.flatMap { case (name, df) =>
       splitsInLambdas(df).map(l => s"$name: ${l.take(300)}")
     }
@@ -181,6 +216,8 @@ class WordNgramsSpec extends SparkSpec {
     // the guard itself sees the shape it forbids
     assert(splitsInLambdas(corpus.select(explode(
       refShingles(col("text"))))).nonEmpty)
+    assert(splitsInLambdas(refSegmented(corpus, 10)
+      .select(col("doc_id"), explode(col("lines")))).nonEmpty)
     // and the exploded shingles still equal the former form's
     val sh = DedupQueries.shingled(corpus, "sh")
       .select(col("doc_id"), explode(col("sh")).as("g"))

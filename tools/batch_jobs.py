@@ -23,10 +23,13 @@ matches, e.g. `--match minhash_text` for the near-dup candidate probe.
 With `--stages N` it prints instead the N longest stages of each
 application, micro-batch or not (longest by wall time, submission to
 completion): stage and SQL execution ids, tasks, wall, task run and task
-CPU seconds, records in (scan plus shuffle read) and out (write plus
-shuffle write), shuffle bytes read and written, and the top operators of
-the owning SQL execution. This is where a whole run's time goes, e.g. a
-scan whose task CPU dwarfs its records.
+CPU seconds, executor deserialize time and deserialize CPU seconds (the
+cost of unpacking each task's closure and what it carries before it
+runs), records in (scan plus shuffle read) and out (write plus shuffle
+write), shuffle bytes read and written, and the top operators of the
+owning SQL execution. This is where a whole run's time goes, e.g. a
+scan whose task CPU dwarfs its records, or tiny tasks that spend longer
+deserializing than running.
 
 A directory may be one event log (`eventlog_v2_*`, rolled `events_*`
 files) or a directory of logs; every application with micro-batches is
@@ -118,6 +121,8 @@ def add_task(stage, m):
             ("tasks", 1),
             ("run_ms", m.get("Executor Run Time", 0)),
             ("cpu_ns", m.get("Executor CPU Time", 0)),
+            ("deser_ms", m.get("Executor Deserialize Time", 0)),
+            ("deser_cpu_ns", m.get("Executor Deserialize CPU Time", 0)),
             ("rec_in", (m.get("Input Metrics") or {}).get("Records Read", 0)
              + sr.get("Total Records Read", 0)),
             ("rec_out",
@@ -184,14 +189,17 @@ def report_stages(stages, sqls, n):
     def wall(st):
         return (st.get("done") or 0) - (st.get("submit") or 0)
     print(f"{'stage':>6} {'sql':>5} {'tasks':>5} {'wall_s':>7} {'run_s':>7} "
-          f"{'cpu_s':>7} {'rec_in':>9} {'rec_out':>9} {'sh_read':>10} "
+          f"{'cpu_s':>7} {'deser_s':>7} {'dcpu_s':>7} {'rec_in':>9} "
+          f"{'rec_out':>9} {'sh_read':>10} "
           f"{'sh_write':>10}  sql plan")
     for sid, st in sorted(stages.items(), key=lambda kv: -wall(kv[1]))[:n]:
         sql = st.get("sql")
         print(f"{sid:>6} {sql if sql is not None else '-':>5} "
               f"{st.get('tasks', 0):>5} {wall(st) / 1e3:7.2f} "
               f"{st.get('run_ms', 0) / 1e3:7.2f} "
-              f"{st.get('cpu_ns', 0) / 1e9:7.2f} {st.get('rec_in', 0):>9} "
+              f"{st.get('cpu_ns', 0) / 1e9:7.2f} "
+              f"{st.get('deser_ms', 0) / 1e3:7.3f} "
+              f"{st.get('deser_cpu_ns', 0) / 1e9:7.3f} {st.get('rec_in', 0):>9} "
               f"{st.get('rec_out', 0):>9} {st.get('sh_read', 0):>10} "
               f"{st.get('sh_write', 0):>10}  "
               f"{sqls.get(sql, {}).get('top', '(no SQL execution)')}")
